@@ -15,6 +15,9 @@ from pyspark.sql import functions as F
 
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import register
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.readers import read_table
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.streaming.isolation import (
+    stream_session,
+)
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.functions.scalars import (
     dec_sum,
     event_time,
@@ -225,6 +228,7 @@ def s06_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join — only the |segments|-row aggregation exchanges.""",
 )
 def s07_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     # batch read sets the nanosAsLong conf; also the static dim source
@@ -314,6 +318,7 @@ def s08_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark.""",
 )
 def s09_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     read_table(spark, sf_dir, "events")  # sets raw-read confs if needed
@@ -394,6 +399,7 @@ def s09_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the real run). State stays bounded by the same eviction.""",
 )
 def s10_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     read_table(spark, sf_dir, "events")
@@ -461,6 +467,7 @@ def s10_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     here, so NOT IN is safe — contrast q50).""",
 )
 def s11_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     docs = read_table(spark, sf_dir, "documents")  # sets read-time confs
@@ -494,49 +501,35 @@ def _drain_to_memory(df, output_mode: str, prefix: str):
     table. One definition of the uuid/checkpoint/start/await sequence
     instead of a copy per entry.
 
-    State-partition pin (VERDICT r8 item 5): a streaming query binds
-    its state partitioning to ``spark.sql.shuffle.partitions`` AT
-    START, and every state partition costs real per-micro-batch work
-    (task launch + a state-store instance with its commit files — a
-    stream-stream join runs FOUR store instances per partition). Under
-    the plain verify session's default 200 partitions, s09/s10 spent
-    22-28 s each on ~220 KB of events — pure store/scheduling
-    overhead, 51 s of the 294 s full sweep. The fixtures drain one
-    tiny file, so we pin a toy-scale count (default 8, env
-    ``SPARK_GRAFT_STREAM_STATE_PARTITIONS``) for the query's lifetime
-    and restore the session value after. Results are partitioning-
-    independent; a production deploy sizes the same knob to its key
-    cardinality when the checkpoint is first created (state partition
-    count is fixed for the checkpoint's life — docs/SCALE.md)."""
+    Every caller builds ``df`` on a :func:`stream_session`, so the
+    query's state partitioning is bound to the cluster's default
+    parallelism at start and the caller's session is never touched.
+    The memory sink registers its table in ``df.sparkSession``, which
+    is also where the result is read back from."""
     import os
     import shutil
     import tempfile
     import uuid
 
-    from aws_etl_pipeline_financial_streamlit_dashboard_spark.streaming.stateconf import (
-        pinned_state_partitions,
-    )
-
     spark = df.sparkSession
     name = f"{prefix}_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     try:
-        with pinned_state_partitions(spark):
-            (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", os.path.join(ckpt, "state"))
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
+        (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", os.path.join(ckpt, "state"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
     finally:
         # the drained memory table is independent of the checkpoint;
         # remove it eagerly so repeated verify/bench runs don't
         # accumulate orphaned state dirs (ADVICE r3)
         shutil.rmtree(ckpt, ignore_errors=True)
-    return df.sparkSession.table(name)
+    return spark.table(name)
 
 
 
@@ -587,6 +580,7 @@ def _drain_to_memory(df, output_mode: str, prefix: str):
     aggregation expression, different sink mode.""",
 )
 def s12_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     read_table(spark, sf_dir, "events")  # sets raw-read confs if needed
@@ -689,6 +683,7 @@ def s12_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable struct-extreme aggregates as q55/s12.""",
 )
 def s13_streaming_ohlc_append(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     read_table(spark, sf_dir, "events")  # sets raw-read confs if needed
@@ -764,6 +759,7 @@ def s13_streaming_ohlc_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     the delta rows only.""",
 )
 def s14_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     read_table(spark, sf_dir, "events")  # sets raw-read confs if needed
@@ -856,6 +852,7 @@ def s14_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the rest of the streaming family.""",
 )
 def s15_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     read_table(spark, sf_dir, "events")  # sets raw-read confs if needed
@@ -1077,6 +1074,7 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog_llm impo
     foreachBatch router in production.""",
 )
 def s18_streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     read_table(spark, sf_dir, "documents")  # sets raw-read confs if needed
@@ -1173,6 +1171,7 @@ _S19_ORACLE = f"""
     stateless per-row codegen.""",
 )
 def s19_streaming_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     read_table(spark, sf_dir, "documents")  # sets raw-read confs if needed
@@ -1276,6 +1275,7 @@ _S20_ORACLE = f"""
     with no watermark needed (nothing aggregates).""",
 )
 def s20_streaming_rag_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     read_table(spark, sf_dir, "documents")  # sets raw-read confs if needed
@@ -1400,6 +1400,7 @@ _S21_ORACLE = f"""
     oracle-checkable.""",
 )
 def s21_streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     read_table(spark, sf_dir, "events")  # sets nanosAsLong conf if needed
@@ -1538,6 +1539,7 @@ _S22_ORACLE = f"""
 def s22_streaming_histogram_quantiles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     read_table(spark, sf_dir, "events")  # sets nanosAsLong conf if needed
@@ -1633,6 +1635,7 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog_feats im
     routed to the corpus sink via foreachBatch in production.""",
 )
 def s23_streaming_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     read_table(spark, sf_dir, "documents")  # sets raw-read confs if needed
@@ -1703,6 +1706,7 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog_r10 impo
     shape keeps; the finish never touches the fact stream.""",
 )
 def s24_streaming_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     read_table(spark, sf_dir, "customer")  # sets raw-read confs if needed
@@ -1750,6 +1754,7 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog_r10 impo
     law); the smoothing finish never touches the token stream.""",
 )
 def s25_streaming_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     read_table(spark, sf_dir, "documents")  # sets raw-read confs if needed
@@ -1817,6 +1822,7 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog_r10 impo
     s21/s22/s24/s25's mergeable-state + bounded-finish pattern.""",
 )
 def s26_streaming_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.skew import (
@@ -1910,6 +1916,7 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog_sketch i
     evict, they accumulate.""",
 )
 def s27_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.dedup import (
@@ -2007,6 +2014,7 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog_sketch i
     the sketch exists to avoid).""",
 )
 def s28_streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
+    spark = stream_session(spark)
     import os
 
     from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.bloom import (

@@ -20,6 +20,20 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# local-mode driver heap ceiling: 8g left the sf10 (1.8 GB parquet)
+# headline GC-bound — q07 measured 2.4 s at 8g vs ~1.0 s at 24g on a
+# 128 GiB host
+MAX_DRIVER_MEMORY_GIB = 24
+
+
+def default_driver_memory(host_bytes: int | None = None) -> str:
+    """Driver heap for a host with ``host_bytes`` of RAM (default: this
+    host): half of it in whole GiB, at least 1g and at most
+    ``MAX_DRIVER_MEMORY_GIB``. The other half stays for the Python
+    workers, off-heap buffers and the page cache."""
+    if host_bytes is None:
+        host_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(MAX_DRIVER_MEMORY_GIB, max(1, host_bytes // 2**31))}g"
 
 
 def get_spark(
@@ -82,11 +96,13 @@ def get_spark(
         # ~2 live rounds; see operators/lineage.py).
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # local-mode sizing: in local[N] the driver JVM IS the executor,
-        # so this is the whole engine's heap. 8g left the sf10 (1.8 GB
-        # parquet) headline GC-bound — q07 measured 2.4 s at 8g vs
-        # ~1.0 s at 24g; the host has 128 GiB. On a real cluster
+        # so this is the whole engine's heap, sized from host RAM unless
+        # SPARK_DRIVER_MEMORY says otherwise. On a real cluster
         # spark-submit sizes executors and this only feeds the driver.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -21,6 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.streaming.isolation import (
+    stream_session,
+)
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -78,6 +82,7 @@ def run_available_now_to_parquet(
     """Drain-all-new-files-then-stop micro-batch run: the Spark-native
     form of the reference's marker-triggered incremental refresh.
     Append mode + watermark = finalized windows only reach the sink."""
+    spark = stream_session(spark)
     events = stream_events_from_files(spark, src_path)
     agg = tumbling_counts_stream(events)
     (
@@ -121,6 +126,7 @@ def run_dedup_to_parquet(
     """Incremental exactly-once ingest: file stream → watermarked dedup
     → parquet. Re-running after new (possibly overlapping) files land
     appends only never-seen events."""
+    spark = stream_session(spark)
     events = stream_events_from_files(spark, src_path)
     (
         dedup_events_stream(events, watermark)
@@ -148,6 +154,7 @@ def run_dedup_available_now(
     ``Trigger.AvailableNow``. Result contract: identical to DISTINCT
     over one copy — which is what the batch oracle checks.
     """
+    spark = stream_session(spark)
     import os
     import tempfile
     import uuid
@@ -171,22 +178,17 @@ def run_dedup_available_now(
         "event_id", "user_id", "event_type", "value"
     )
 
-    from aws_etl_pipeline_financial_streamlit_dashboard_spark.streaming.stateconf import (
-        pinned_state_partitions,
-    )
-
     name = f"stream_dedup_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    with pinned_state_partitions(spark):
-        (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(ckpt, "state"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    (
+        deduped.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", os.path.join(ckpt, "state"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
     return spark.table(name)
 
 

@@ -24,6 +24,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.streaming.isolation import (
+    stream_session,
+)
+
 RUNNING_TOTALS_SCHEMA = "user_id bigint, n_events bigint, total_value double"
 _RUNNING_STATE_SCHEMA = "n bigint, cents bigint"
 
@@ -205,6 +209,7 @@ def run_running_totals_available_now(spark, events_parquet: str) -> DataFrame:
     file, so the drain is one micro-batch and each user emits exactly
     one final row.
     """
+    spark = stream_session(spark)
     import os
     import tempfile
     import uuid
@@ -225,20 +230,15 @@ def run_running_totals_available_now(spark, events_parquet: str) -> DataFrame:
     )
     totals = running_user_totals(stream)
 
-    from aws_etl_pipeline_financial_streamlit_dashboard_spark.streaming.stateconf import (
-        pinned_state_partitions,
-    )
-
     name = f"running_totals_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    with pinned_state_partitions(spark):
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(ckpt, "state"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    (
+        totals.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .option("checkpointLocation", os.path.join(ckpt, "state"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
     return spark.table(name)
