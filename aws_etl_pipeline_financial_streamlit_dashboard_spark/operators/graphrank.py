@@ -92,9 +92,9 @@ def pagerank_int(
     # recorded, the SHUFFLE_HASH-hinted iteration joins stream the
     # edge checkpoint in place at ANY graph size: per iteration, one
     # pass over the edges plus the unavoidable contribution-aggregate
-    # exchange — zero sorts, zero edge-side exchanges (plan dumps in
-    # plans/r15/). The conf toggle is driver-side, build-time only,
-    # and restored in a finally.
+    # exchange — zero sorts, zero edge-side exchanges (plan dumps:
+    # git show 130db1f:plans/r15/). The conf toggle is driver-side,
+    # build-time only, and restored in a finally.
     from pyspark.storagelevel import StorageLevel
 
     spark = edges.sparkSession

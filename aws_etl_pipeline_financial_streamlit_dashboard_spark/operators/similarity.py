@@ -20,8 +20,9 @@ def dot(a: Column, b: Column) -> Column:
     Column-API twin of the :func:`_sql_dot` fold (same accumulation
     order, bit-identical values). Since round 11 the fold IS the hot
     kernel form — the old dim-unrolled chain was re-measured 6.7×
-    slower at pair-kernel scale (tools/profile_dot_kernel.py); the
-    named-column helpers (:func:`cosine_fixed`/:func:`cosine_pre`)
+    slower at pair-kernel scale
+    (``git show 130db1f:tools/profile_dot_kernel.py``); the named-column
+    helpers (:func:`cosine_fixed`/:func:`cosine_pre`)
     remain the per-table entry points."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -54,8 +55,9 @@ def _sql_dot(a: str, b: str, dim: int) -> str:
     previous dim-unrolled ``get()`` chain (probed over 18k sf0.01
     pairs, 0 mismatches, round 11).
 
-    Form chosen by measurement (tools/profile_dot_kernel.py, sf10
-    7M-pair eval-ladder kernel, VERDICT r10 item 1): the unrolled
+    Form chosen by measurement
+    (``git show 130db1f:tools/profile_dot_kernel.py``, sf10 7M-pair
+    eval-ladder kernel, VERDICT r10 item 1): the unrolled
     64-term ``+`` chain codegens to a straight-line expression tree
     the JIT cannot vectorize — r10 measured its ~45 core-µs/pair
     floor — while this fold gives the engine a loop over the array
@@ -943,7 +945,8 @@ def hyperplane_bucket_table_int(
     with tables·planes conditional sums. The explode+agg form pushed
     |rows|·dim exploded rows through a hash aggregate (an EXCHANGE on
     id at scale); the fold form is exchange-free and measured 2.3×
-    faster at sf10 (tools/profile_lsh_stage.py: 1.59 s → 0.71 s).
+    faster at sf10 (``git show 130db1f:tools/profile_lsh_stage.py``:
+    1.59 s → 0.71 s).
     Integer arithmetic is exact, so bucket ids are bit-identical by
     construction (checked: fold_eq_current=True over all sf0.1 ids).
 

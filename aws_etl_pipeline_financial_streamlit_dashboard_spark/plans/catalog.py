@@ -995,7 +995,7 @@ _SAMPLER_FRONT_R10 = [
     #   (iterative operators route through it under reliable=True)
     "x18_dedup_components", "x43_components_star",
     "x46_graph_pagerank", "x61_triangle_count",
-    # - every _drain_to_memory streaming entry: state partitioning is
+    # - every drain_to_memory streaming entry: state partitioning is
     #   bound at query start (now on streaming/isolation.stream_session)
     "s09_stream_stream_join", "s15_streaming_session_window",
     "s18_streaming_quality_gate", "s19_streaming_corpus_pipeline",

@@ -2411,8 +2411,8 @@ def _x108_oracle() -> str:
 def _pq_recon_sequential(emb: DataFrame) -> DataFrame:
     """The pre-round-12 reconstruction: 4 SEQUENTIAL _kmeans_core
     trainings (8 eager checkpoints, 4 identical plan chains) joined
-    pairwise on pid. Kept as the A/B baseline for
-    tools/profile_pq_fuse.py — the entry ships the fused form."""
+    pairwise on pid. Kept as the A/B baseline for the fused form the
+    entry ships (``git show 130db1f:tools/profile_pq_fuse.py``)."""
     from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.clustering import (
         _kmeans_core,
     )
@@ -2453,7 +2453,7 @@ def _pq_recon_fused(emb: DataFrame) -> DataFrame:
     sequential form — exact integer micro arithmetic throughout, and
     the fused seed set slices the SAME (id mod seed_mod, id)-ordered
     rows — verified value-for-value over every sf0.01 and sf0.1
-    vector (tools/profile_pq_fuse.py --check)."""
+    vector (``git show 130db1f:tools/profile_pq_fuse.py`` --check)."""
     from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.clustering import (
         _kmeans_core_fused_subspaces,
     )
@@ -2501,7 +2501,8 @@ def _pq_recon_fused(emb: DataFrame) -> DataFrame:
     one corpus scan, one broadcast-assign exchange per iteration over
     (pid, sub), centroid state k×4 rows, one checkpoint per round
     instead of four; bit-identical to the sequential trainings
-    (exact integer micros; tools/profile_pq_fuse.py --check).
+    (exact integer micros;
+    ``git show 130db1f:tools/profile_pq_fuse.py`` --check).
     Encoding is an 8-way broadcast argmin per subspace; the recall
     eval runs on a mod-hash query SAMPLE — the production acceptance
     gate before shipping a PQ index.""",

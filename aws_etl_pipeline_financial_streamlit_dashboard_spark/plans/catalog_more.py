@@ -1140,7 +1140,7 @@ def x23_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     # struct buffers can't hash-aggregate — but the partial pass
     # collapses |doc·token| rows to |docs| BEFORE the exchange, which
     # the window never could.) Measured at sf10 with the DF reuse
-    # together: 66.4 → 15.9 s median (OPTIMIZATION_r14.md).
+    # together: 66.4 → 15.9 s median (git show 130db1f:OPTIMIZATION_r14.md).
     return (
         scored.groupBy("doc_id")
         .agg(

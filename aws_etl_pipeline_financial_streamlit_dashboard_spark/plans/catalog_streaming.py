@@ -18,6 +18,10 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.readers import
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.streaming.isolation import (
     stream_session,
 )
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.streaming.jobs import (
+    drain_to_memory,
+    run_dedup_available_now,
+)
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.functions.scalars import (
     dec_sum,
     event_time,
@@ -195,10 +199,6 @@ def s04_event_type_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s06_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from aws_etl_pipeline_financial_streamlit_dashboard_spark.streaming.jobs import (
-        run_dedup_available_now,
-    )
-
     # batch read via read_table sets the nanosAsLong conf the raw
     # spark.read inside the runner needs for the events table
     read_table(spark, sf_dir, "events")
@@ -251,7 +251,7 @@ def s07_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         dec_sum("value", 2).alias("sum_value"),
     )
 
-    return _drain_to_memory(agg, "complete", "stream_static")
+    return drain_to_memory(agg, "complete", "stream_static")
 
 
 @register(
@@ -358,7 +358,7 @@ def s09_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("v_ts").alias("v_ts_us"),
     )
 
-    return _drain_to_memory(joined, "append", "stream_stream")
+    return drain_to_memory(joined, "append", "stream_stream")
 
 
 @register(
@@ -440,7 +440,7 @@ def s10_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("v_ts").alias("v_ts_us"),
     )
 
-    return _drain_to_memory(joined, "append", "stream_left")
+    return drain_to_memory(joined, "append", "stream_left")
 
 
 @register(
@@ -492,45 +492,7 @@ def s11_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source")
     )
 
-    return _drain_to_memory(fresh, "append", "stream_incr_dedup")
-
-
-def _drain_to_memory(df, output_mode: str, prefix: str):
-    """Shared sink tail for the real-streaming entries: memory sink +
-    fresh checkpoint + Trigger.AvailableNow, returning the drained
-    table. One definition of the uuid/checkpoint/start/await sequence
-    instead of a copy per entry.
-
-    Every caller builds ``df`` on a :func:`stream_session`, so the
-    query's state partitioning is bound to the cluster's default
-    parallelism at start and the caller's session is never touched.
-    The memory sink registers its table in ``df.sparkSession``, which
-    is also where the result is read back from."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    spark = df.sparkSession
-    name = f"{prefix}_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    try:
-        (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", os.path.join(ckpt, "state"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        # the drained memory table is independent of the checkpoint;
-        # remove it eagerly so repeated verify/bench runs don't
-        # accumulate orphaned state dirs (ADVICE r3)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
-
+    return drain_to_memory(fresh, "append", "stream_incr_dedup")
 
 
 @register(
@@ -634,7 +596,7 @@ def s12_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_trades",
         )
     )
-    return _drain_to_memory(bars, "complete", "stream_ohlc")
+    return drain_to_memory(bars, "complete", "stream_ohlc")
 
 
 @register(
@@ -735,7 +697,7 @@ def s13_streaming_ohlc_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_trades",
         )
     )
-    return _drain_to_memory(bars, "append", "stream_ohlc_ap")
+    return drain_to_memory(bars, "append", "stream_ohlc_ap")
 
 
 @register(
@@ -776,7 +738,7 @@ def s14_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         dec_sum("value", 2).alias("sum_value"),
     )
-    out = _drain_to_memory(agg, "update", "stream_update")
+    out = drain_to_memory(agg, "update", "stream_update")
     # Update mode appends each batch's changed rows to the memory sink;
     # a multi-batch drain therefore leaves intermediate running values
     # per key alongside the final ones. Instead of failing hard on any
@@ -882,7 +844,7 @@ def s15_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return _drain_to_memory(sess, "append", "stream_session")
+    return drain_to_memory(sess, "append", "stream_session")
 
 
 # ===========================================================================
@@ -1095,7 +1057,7 @@ def s18_streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_keep"),
         )
     )
-    out = _drain_to_memory(agg, "complete", "stream_quality")
+    out = drain_to_memory(agg, "complete", "stream_quality")
     return out.select(
         "source",
         "n_docs",
@@ -1209,7 +1171,7 @@ def s19_streaming_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_docs_kept"),
         F.sum(_s19_token_count(F.col("text"))).cast("long").alias("tokens_kept"),
     )
-    return _drain_to_memory(agg, "complete", "stream_pipeline")
+    return drain_to_memory(agg, "complete", "stream_pipeline")
 
 
 # ===========================================================================
@@ -1318,7 +1280,7 @@ def s20_streaming_rag_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"array_join(slice(w, CAST({start} AS INT), CAST({ln} AS INT)), ' ')"
         " AS chunk_text",
     )
-    return _drain_to_memory(chunks, "append", "stream_chunks")
+    return drain_to_memory(chunks, "append", "stream_chunks")
 
 
 # ===========================================================================
@@ -1431,7 +1393,7 @@ def s21_streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("m")
     )
-    regs = _drain_to_memory(reg, "complete", "stream_hll")
+    regs = drain_to_memory(reg, "complete", "stream_hll")
 
     agg = regs.groupBy("event_type").agg(
         F.expr("CAST(SUM(shiftleft(1L, 25 - m)) AS BIGINT)").alias("t_present"),
@@ -1562,7 +1524,7 @@ def s22_streaming_histogram_quantiles(
     reg = stream.groupBy("event_type", "bucket").agg(
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("cnt")
     )
-    regs = _drain_to_memory(reg, "complete", "stream_hist")
+    regs = drain_to_memory(reg, "complete", "stream_hist")
 
     from pyspark.sql import Window as W
 
@@ -1672,7 +1634,7 @@ def s23_streaming_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS BIGINT)"
         ).alias("n_docs_changed"),
     )
-    return _drain_to_memory(agg, "complete", "stream_pii")
+    return drain_to_memory(agg, "complete", "stream_pii")
 
 
 # ===========================================================================
@@ -1724,7 +1686,7 @@ def s24_streaming_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         F.expr("CAST(FLOOR(c_acctbal / 1000) AS BIGINT)").alias("band"),
     ).agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("sz"))
-    state = _drain_to_memory(cls, "complete", "stream_kanon")
+    state = drain_to_memory(cls, "complete", "stream_kanon")
     return k_anonymity_report(state)
 
 
@@ -1771,7 +1733,7 @@ def s25_streaming_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFra
     freq = tok.groupBy("token").agg(
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("f")
     )
-    state = _drain_to_memory(freq, "complete", "stream_negsamp")
+    state = drain_to_memory(freq, "complete", "stream_negsamp")
     w = state.select(
         "token",
         "f",
@@ -1848,7 +1810,7 @@ def s26_streaming_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFra
     # total, filter side) would otherwise self-join the memory-sink
     # VIEW, which trips conflicting-reference resolution — and the
     # q54 materialize-once rationale applies anyway (|src|×|vocab| rows)
-    st = _drain_to_memory(
+    st = drain_to_memory(
         counts, "complete", "stream_distinct_terms"
     ).localCheckpoint(eager=True)
     stot = st.groupBy("source").agg(F.expr("CAST(SUM(c) AS BIGINT)").alias("ns"))
@@ -1952,7 +1914,7 @@ def s27_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r", "c")
         .agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("cell"))
     )
-    sketch = _drain_to_memory(cells, "complete", "stream_cm")
+    sketch = drain_to_memory(cells, "complete", "stream_cm")
 
     # batch finish over the drained bounded cell table — x130's shape
     docs = read_table(spark, sf_dir, "documents").select("text")
@@ -2053,7 +2015,7 @@ def s28_streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" CAST(pos % {WORD_BITS} AS INT)))"
         ).alias("bits")
     )
-    words = _drain_to_memory(words_stream, "complete", "stream_bloom")
+    words = drain_to_memory(words_stream, "complete", "stream_bloom")
 
     # batch probe finish over the drained ≤33-word filter — x131's shape
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")

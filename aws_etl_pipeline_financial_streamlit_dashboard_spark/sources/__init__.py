@@ -8,10 +8,8 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.maintenance im
     plan_compaction,
 )
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.readers import (
-    load_testdata,
     read_csv_seed,
     read_table,
-    register_views,
 )
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.sinks import (
     upsert_partitions,
@@ -24,11 +22,9 @@ __all__ = [
     "cluster_by_range",
     "compact_parquet",
     "drop_table",
-    "load_testdata",
     "plan_compaction",
     "read_csv_seed",
     "read_table",
-    "register_views",
     "upsert_partitions",
     "write_bucketed",
     "write_jdbc_overwrite",

@@ -208,6 +208,43 @@ def yfinance_fetcher(ticker: str) -> tuple[dict, list[dict]]:
     return info, bars
 
 
+def ticker_records(fetcher: Fetcher, ticker: str, mode: str) -> list[dict]:
+    """One ticker's output records: its ``info`` snapshot (mode
+    ``"info"``) or one record per monthly bar (any other mode), each
+    with ``fetch_error`` None. A failing fetch becomes a single
+    ``{"ticker", "fetch_error"}`` row — per-ticker error isolation, vs
+    the reference's skip-a-whole-batch try/except
+    (retrieval.py:140-151)."""
+    try:
+        info, bars = fetcher(ticker)
+        if mode == "info":
+            return [{**info, "fetch_error": None}]
+        return [{**b, "fetch_error": None} for b in bars]
+    except Exception as exc:
+        return [{"ticker": ticker, "fetch_error": repr(exc)}]
+
+
+def _fetch(
+    tickers: DataFrame,
+    fetcher: Fetcher,
+    parallelism: int | None,
+    ticker_col: str,
+    mode: str,
+) -> DataFrame:
+    schema = INFO_SCHEMA if mode == "info" else STOCK_SCHEMA
+    cols = schema.fieldNames()
+    src = tickers.select(F.upper(F.col(ticker_col)).alias("ticker"))
+    if parallelism:
+        src = src.repartition(parallelism)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [r for t in pdf["ticker"] for r in ticker_records(fetcher, t, mode)]
+            yield pd.DataFrame(out, columns=cols)
+
+    return src.mapInPandas(run, schema=schema)
+
+
 def fetch_info(
     tickers: DataFrame,
     fetcher: Fetcher = fake_fetcher,
@@ -219,26 +256,9 @@ def fetch_info(
     ``repartition(parallelism)`` replaces the reference's linspace RAM
     batching (retrieval.py:133-137): fetch concurrency == partition
     count, each worker holds only its partition. Failures isolate
-    per-ticker into ``fetch_error`` rows (vs the reference's
-    skip-a-whole-batch try/except, retrieval.py:140-151).
+    per-ticker into ``fetch_error`` rows (:func:`ticker_records`).
     """
-    src = tickers.select(F.upper(F.col(ticker_col)).alias("ticker"))
-    if parallelism:
-        src = src.repartition(parallelism)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in INFO_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for t in pdf["ticker"]:
-                try:
-                    info, _ = fetcher(t)
-                    out.append({**info, "fetch_error": None})
-                except Exception as exc:  # per-ticker isolation
-                    out.append({"ticker": t, "fetch_error": repr(exc)})
-            yield pd.DataFrame(out, columns=cols)
-
-    return src.mapInPandas(run, schema=INFO_SCHEMA)
+    return _fetch(tickers, fetcher, parallelism, ticker_col, "info")
 
 
 def fetch_stock_history(
@@ -249,20 +269,4 @@ def fetch_stock_history(
 ) -> DataFrame:
     """Per-ticker monthly-bar history extract (getStock,
     retrieval.py:27-47): one output row per (ticker, month)."""
-    src = tickers.select(F.upper(F.col(ticker_col)).alias("ticker"))
-    if parallelism:
-        src = src.repartition(parallelism)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in STOCK_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for t in pdf["ticker"]:
-                try:
-                    _, bars = fetcher(t)
-                    out.extend({**b, "fetch_error": None} for b in bars)
-                except Exception as exc:
-                    out.append({"ticker": t, "fetch_error": repr(exc)})
-            yield pd.DataFrame(out, columns=cols)
-
-    return src.mapInPandas(run, schema=STOCK_SCHEMA)
+    return _fetch(tickers, fetcher, parallelism, ticker_col, "stock")

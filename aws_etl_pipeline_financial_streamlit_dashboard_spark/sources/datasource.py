@@ -37,6 +37,7 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.api_fetch impo
     INFO_SCHEMA,
     STOCK_SCHEMA,
     fake_fetcher,
+    ticker_records,
 )
 
 
@@ -66,17 +67,7 @@ class FinancialApiReader(DataSourceReader):
     def read(self, partition):
         fields = (INFO_SCHEMA if self.mode == "info" else STOCK_SCHEMA).fieldNames()
         for t in partition.tickers:
-            try:
-                info, bars = fake_fetcher(t)
-                if self.mode == "info":
-                    rec = {**info, "fetch_error": None}
-                    yield tuple(rec.get(f) for f in fields)
-                else:
-                    for b in bars:
-                        rec = {**b, "fetch_error": None}
-                        yield tuple(rec.get(f) for f in fields)
-            except Exception as exc:  # per-ticker isolation (B2)
-                rec = {"ticker": t, "fetch_error": repr(exc)}
+            for rec in ticker_records(fake_fetcher, t, self.mode):
                 yield tuple(rec.get(f) for f in fields)
 
 

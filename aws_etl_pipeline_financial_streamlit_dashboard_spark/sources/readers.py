@@ -1,11 +1,13 @@
 """Declarative readers (SURVEY.md §2.1 S1-S5).
 
-The reference reads parquet directories, a CSV seed list, and a JSON
-config with pandas + boto3 (cleaning.py:15-17, retrieval.py:77-78,
-TableTransform.py:16-18). Spark-first equivalents are one-liners that
-keep predicate pushdown and column pruning available to Catalyst — the
-reference pruned columns manually (SURVEY.md §4); here the lazy plan
-does it, so a query touching 2 columns scans 2 columns.
+The reference reads parquet directories and a CSV seed list with
+pandas + boto3 (cleaning.py:15-17, retrieval.py:77-78); its JSON
+connection config (TableTransform.py:16-18) is driver-side state, not
+data, and needs no reader here. Spark-first equivalents are
+one-liners that keep predicate pushdown and column pruning available
+to Catalyst — the reference pruned columns manually (SURVEY.md §4);
+here the lazy plan does it, so a query touching 2 columns scans 2
+columns.
 """
 
 from __future__ import annotations
@@ -14,8 +16,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.schemas import TESTDATA_TABLES
 
 
 # Analyzed-relation cache: resolving a table (parquet footer read +
@@ -102,26 +102,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every driver testdata table present under ``sf_dir``."""
-    out: dict[str, DataFrame] = {}
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = spark.read.parquet(path)
-    return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each testdata table as a temp view for ``spark.sql`` plans
-    (the S5 pattern: the reference delegated serving SQL to Postgres,
-    Frontend.py:28-79; here the engine itself serves SQL)."""
-    dfs = load_testdata(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
-
-
 def read_csv_seed(spark: SparkSession, path: str, column: str = "ticker_name") -> DataFrame:
     """CSV seed-dimension scan (S2; retrieval.py:77-78 equivalent).
 
@@ -189,14 +169,3 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     pushdown surface as parquet (filters, column pruning, partition
     pruning) — a query touching 2 columns scans 2 columns."""
     return spark.read.orc(path)
-
-
-def read_json_config(spark: SparkSession, path: str) -> dict:
-    """JSON config scan (S3; TableTransform.py:16-18 equivalent).
-
-    Config is driver-side state, not distributed data — plain json load.
-    """
-    import json
-
-    with open(path) as f:
-        return json.load(f)

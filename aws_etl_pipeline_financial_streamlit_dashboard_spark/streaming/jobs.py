@@ -140,6 +140,40 @@ def run_dedup_to_parquet(
     )
 
 
+def drain_to_memory(df: DataFrame, output_mode: str, prefix: str) -> DataFrame:
+    """Run the streaming ``df`` into a memory sink under
+    ``Trigger.AvailableNow`` with a fresh checkpoint and return the
+    drained table — the one memory-sink drain every batch-shaped
+    streaming entry point ends in.
+
+    Callers build ``df`` on a :func:`stream_session`, so the query's
+    state partitioning is bound to the cluster's default parallelism at
+    start and the caller's session is never touched. The memory sink
+    registers its table in ``df.sparkSession``, which is also where the
+    result is read back from. The checkpoint is removed once the drain
+    returns: the memory table does not depend on it."""
+    import os
+    import shutil
+    import tempfile
+    import uuid
+
+    name = f"{prefix}_{uuid.uuid4().hex[:12]}"
+    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
+    try:
+        (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", os.path.join(ckpt, "state"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return df.sparkSession.table(name)
+
+
 def run_dedup_available_now(
     spark: SparkSession, events_parquet: str, n_copies: int = 2
 ) -> DataFrame:
@@ -155,11 +189,9 @@ def run_dedup_available_now(
     over one copy — which is what the batch oracle checks.
     """
     spark = stream_session(spark)
-    import os
+    import shutil
     import tempfile
-    import uuid
 
-    src_dir = tempfile.mkdtemp(prefix="dedup_src_")
     batch = spark.read.parquet(events_parquet)
     if "ts" in batch.columns and dict(batch.dtypes)["ts"] == "bigint":
         # driver testdata stores TIMESTAMP(NANOS) → read as long under
@@ -170,26 +202,20 @@ def run_dedup_available_now(
         # are tz-strict (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE); reinterpret
         # wall-clock in the session tz (UTC)
         batch = batch.withColumn("ts", F.col("ts").cast("timestamp"))
-    for i in range(n_copies):
-        batch.coalesce(1).write.mode("append").parquet(src_dir)
 
-    stream = spark.readStream.schema(batch.schema).parquet(src_dir)
-    deduped = dedup_events_stream(stream).select(
-        "event_id", "user_id", "event_type", "value"
-    )
-
-    name = f"stream_dedup_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(ckpt, "state"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return spark.table(name)
+    src_dir = tempfile.mkdtemp(prefix="dedup_src_")
+    try:
+        for i in range(n_copies):
+            batch.coalesce(1).write.mode("append").parquet(src_dir)
+        stream = spark.readStream.schema(batch.schema).parquet(src_dir)
+        deduped = dedup_events_stream(stream).select(
+            "event_id", "user_id", "event_type", "value"
+        )
+        return drain_to_memory(deduped, "append", "stream_dedup")
+    finally:
+        # the memory sink holds the drained rows; the redelivered copies
+        # are no longer read
+        shutil.rmtree(src_dir, ignore_errors=True)
 
 
 def run_foreach_batch_ingest(

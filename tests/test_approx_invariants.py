@@ -351,7 +351,8 @@ def test_pq_fused_training_bit_identical_to_sequential(spark, sf_dir):
     reproduce the four sequential 16-dim trainings EXACTLY — same
     seed rows (slicing commutes with the (id mod m, id) order/limit),
     same integer-micro distances and means — so the entry's oracle is
-    untouched. Profiled 1.85× faster at sf10 (tools/profile_pq_fuse)."""
+    untouched. Profiled 1.85× faster at sf10
+    (``git show 130db1f:tools/profile_pq_fuse.py``)."""
     from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog_ext import (
         _pq_recon_fused,
         _pq_recon_sequential,

@@ -10,7 +10,7 @@ completeness — on ~6 M lineitem rows.
 
 Opt-in slow test: skipped unless the sf1 directory exists (generate
 with ``python tools/gen_sf.py``). Not part of the per-commit gate;
-run once per round and record the result in docs/ROUND{N}.md.
+record the result in CHANGES.md when a change runs it.
 """
 
 from __future__ import annotations

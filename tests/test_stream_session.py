@@ -99,8 +99,32 @@ def _drain_entries() -> list[str]:
     return sorted(
         name
         for name, q in QUERIES.items()
-        if "_drain_to_memory(" in inspect.getsource(q.spark)
+        if "drain_to_memory(" in inspect.getsource(q.spark)
     )
+
+
+def test_drain_selector_finds_every_memory_sink_entry():
+    assert _drain_entries() == [
+        "s07_stream_static_join",
+        "s09_stream_stream_join",
+        "s10_stream_stream_left_join",
+        "s11_stream_incremental_dedup",
+        "s12_streaming_ohlc",
+        "s13_streaming_ohlc_append",
+        "s14_update_mode_counts",
+        "s15_streaming_session_window",
+        "s18_streaming_quality_gate",
+        "s19_streaming_corpus_pipeline",
+        "s20_streaming_rag_chunking",
+        "s21_streaming_hll_registers",
+        "s22_streaming_histogram_quantiles",
+        "s23_streaming_pii_scrub",
+        "s24_streaming_k_anonymity",
+        "s25_streaming_negative_sampling",
+        "s26_streaming_distinctive_terms",
+        "s27_streaming_countmin",
+        "s28_streaming_bloom",
+    ]
 
 
 def _events(sf_dir: str) -> str:

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.readers import read_table
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.streaming.jobs import (
     run_available_now_to_parquet,
+    run_dedup_available_now,
     stream_events_from_files,
     tumbling_counts_stream,
 )
@@ -24,6 +25,17 @@ def tmpdir():
     d = tempfile.mkdtemp(prefix="stream_test_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+def test_dedup_available_now_removes_its_temp_dirs(spark, sf_dir, tmp_path, monkeypatch):
+    """The redelivered source copies and the drain's checkpoint are
+    removed once the rows are in the memory sink, which still serves
+    them afterwards."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    read_table(spark, sf_dir, "events")  # sets the conf the raw read needs
+    out = run_dedup_available_now(spark, os.path.join(sf_dir, "events.parquet"))
+    assert os.listdir(tmp_path) == []
+    assert out.count() > 0
 
 
 def test_available_now_drains_and_stops(spark, sf_dir, tmpdir):

@@ -4,11 +4,11 @@
 Usage:
     python tools/dump_plans.py OUTDIR SUFFIX name1,name2,...
 
-Writes OUTDIR/<name>_<SUFFIX>.txt per entry — the round-14 deliverable
-(plans/r14/<query>_before.txt / _after.txt). Plans are built against
-$SPARK_GRAFT_SF_DIR (default sf0.1) on the bench session configuration
-(same shuffle sizing / AQE gate as bench.py) so the captured plan is
-the one the bench times.
+Writes OUTDIR/<name>_<SUFFIX>.txt per entry (the round-14 dumps are
+at ``git show 130db1f:plans/r14/``, <query>_before.txt / _after.txt).
+Plans are built against $SPARK_GRAFT_SF_DIR (default sf0.1) on the
+bench session configuration (same shuffle sizing / AQE gate as
+bench.py) so the captured plan is the one the bench times.
 """
 from __future__ import annotations
 
