@@ -83,12 +83,6 @@ def unpivot_metrics(
     return df.unpivot(list(id_cols), list(value_cols), var_name, value_name)
 
 
-def with_label_column(df: DataFrame, label: str, col_name: str = "label") -> DataFrame:
-    """Literal label column replacing pandas index relabeling (R4;
-    Frontend.py:88 equivalent): row identity is data, not an index."""
-    return df.withColumn(col_name, F.lit(label))
-
-
 def keyed_positional_join(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
     """Re-expression of the reference's positional row-index join (J7;
     Frontend.py:84 ``merge(left_index=True, right_index=True)``).

@@ -106,7 +106,7 @@ def test_dashboard_industry_averages(served, spark):
         served["company_info"],
         served["financial_statements"],
         served["ratios"],
-        "AAPL",  # the industry lookup folds into the plan (no round trip)
+        "AAPL",  # a point lookup in the per-snapshot industry index
     )
     rows = avg.collect()
     assert len(rows) == 1  # one aggregate row for the industry
