@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.streaming.isolation import (
     stream_session,
@@ -122,13 +123,37 @@ def run_dedup_to_parquet(
     dst_path: str,
     checkpoint: str,
     watermark: str = "2 hours",
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Incremental exactly-once ingest: file stream → watermarked dedup
     → parquet. Re-running after new (possibly overlapping) files land
-    appends only never-seen events."""
+    appends only never-seen events.
+
+    Each drain runs one micro-batch per batch of new files and no
+    trailing no-data batch (``spark.sql.streaming.noDataMicroBatches.
+    enabled=false`` on the stream's own session). Dedup emits a row the
+    first time it sees its key, so that batch would only advance the
+    watermark and evict state. Without it:
+    - keys expired by the watermark are evicted at the end of the next
+      drain's data batch, so a redelivery arriving in that drain is
+      still dropped by the state;
+    - Spark judges late rows by the previous batch's watermark, so the
+      late threshold lags one drain: a new event older than the
+      watermark the previous drain ended with is appended instead of
+      dropped, while one older than the watermark of two drains back is
+      still dropped. A redelivery of an evicted key is older than the
+      watermark that evicted it, so no event is appended twice;
+    - a duplicate whose event time is more than ``watermark`` after its
+      original may now be dropped where it could have been re-emitted;
+      ``dropDuplicatesWithinWatermark`` promises nothing past its
+      horizon.
+
+    Returns the finished query's ``recentProgress``, one entry per
+    micro-batch: input rows, and per state operator the state rows and
+    ``numRowsDroppedByWatermark``."""
     spark = stream_session(spark)
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     events = stream_events_from_files(spark, src_path)
-    (
+    query = (
         dedup_events_stream(events, watermark)
         .writeStream.outputMode("append")
         .format("parquet")
@@ -136,8 +161,9 @@ def run_dedup_to_parquet(
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
-        .awaitTermination()
     )
+    query.awaitTermination()
+    return query.recentProgress
 
 
 def drain_to_memory(df: DataFrame, output_mode: str, prefix: str) -> DataFrame:

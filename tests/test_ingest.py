@@ -5,6 +5,7 @@ idempotent overwrite."""
 
 from __future__ import annotations
 
+import fcntl
 import os
 import shutil
 import tempfile
@@ -24,6 +25,9 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.sinks import (
     write_marker,
     write_parquet_overwrite,
 )
+
+
+TICKERS = ["AAA", "BBB", "CCC", "DDD", "EEE", "BOOM"]
 
 
 @pytest.fixture(scope="module")
@@ -70,6 +74,15 @@ def test_fetch_stock_history_shape(spark, tickers):
     assert months == sorted(months) and months[0] == "2024-01"
 
 
+def _fin_raw(spark):
+    """One 2024-03 statement per fixture ticker."""
+    return spark.createDataFrame(
+        [("2024-03", t, 10.0, 5.0, 1.0, 2.0, 3.0, 20.0, 10.0) for t in TICKERS],
+        ["month", "ticker", "cash_and_cash_equivalents", "ebitda", "net_income",
+         "net_debt", "total_debt", "current_assets", "current_liabilities"],
+    )
+
+
 def test_extract_to_transform_end_to_end(spark, tickers):
     """Full extract→transform: fetched raw tables flow through
     run_transform (the retrieval.py → cleaning.py pipeline seam)."""
@@ -79,17 +92,57 @@ def test_extract_to_transform_end_to_end(spark, tickers):
     stock_raw = fetch_stock_history(tickers, parallelism=2).filter(
         F.col("fetch_error").isNull()
     ).drop("fetch_error")
-    # minimal financials via the info fetcher's deterministic values
-    fin_raw = spark.createDataFrame(
-        [("2024-03", t, 10.0, 5.0, 1.0, 2.0, 3.0, 20.0, 10.0) for t in
-         ["AAA", "BBB", "CCC", "DDD", "EEE", "BOOM"]],
-        ["month", "ticker", "cash_and_cash_equivalents", "ebitda", "net_income",
-         "net_debt", "total_debt", "current_assets", "current_liabilities"],
-    )
-    serving = run_transform(info_raw, stock_raw, fin_raw)
+    serving = run_transform(info_raw, stock_raw, _fin_raw(spark))
     assert serving["company_info"].count() == 6
     assert serving["stock_price"].count() == 6 * 12
     assert serving["ratios"].filter("market_cap IS NULL").count() == 0
+
+
+def _logging_fetcher(log: str, mode: str):
+    """``fake_fetcher`` that appends ``"<mode> <ticker> <seq>"`` to
+    ``log`` per call, under a file lock, so calls made by any Python
+    worker are counted. ``seq`` numbers the calls; the info snapshot's
+    ``fulltimeemployees`` and ``sharesoutstanding`` both carry it."""
+
+    def fetch(ticker):
+        with open(log, "a+") as fh:
+            fcntl.flock(fh, fcntl.LOCK_EX)
+            fh.seek(0)
+            seq = len(fh.read().splitlines()) + 1
+            fh.write(f"{mode} {ticker} {seq}\n")
+        info, bars = fake_fetcher(ticker)
+        return {**info, "fulltimeemployees": str(seq), "sharesoutstanding": str(seq)}, bars
+
+    return fetch
+
+
+def test_refresh_fetches_each_ticker_once(spark, tickers, tmp_path):
+    """One refresh (extract → run_transform → the four writes) fetches
+    each ticker's info snapshot once, and company_info and ratios both
+    come from that one call."""
+    log = str(tmp_path / "calls.log")
+
+    def extract(fetch, mode):
+        df = fetch(tickers, fetcher=_logging_fetcher(log, mode), parallelism=2)
+        return df.filter(F.col("fetch_error").isNull()).drop("fetch_error")
+
+    serving = run_transform(
+        extract(fetch_info, "info"), extract(fetch_stock_history, "stock"), _fin_raw(spark)
+    )
+    for name, df in serving.items():
+        write_parquet_overwrite(df, str(tmp_path / name))
+
+    calls = [line.split() for line in open(log).read().splitlines()]
+    for want_mode in ("info", "stock"):
+        assert sorted(t for mode, t, _ in calls if mode == want_mode) == sorted(TICKERS)
+    seq = {t: float(n) for mode, t, n in calls if mode == "info"}
+
+    def read(name, col):
+        rows = spark.read.parquet(str(tmp_path / name)).select("ticker", col).collect()
+        return {r["ticker"]: r[col] for r in rows}
+
+    assert read("company_info", "full_time_employees") == seq
+    assert read("ratios", "outstanding_shares") == seq
 
 
 def test_overwrite_idempotence_and_marker(spark, tickers):

@@ -4,6 +4,7 @@ Trigger.AvailableNow, and the windowed agg matches its batch twin."""
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import shutil
 import tempfile
@@ -13,8 +14,10 @@ from pyspark.sql import functions as F
 
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.readers import read_table
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.streaming.jobs import (
+    EVENTS_SCHEMA,
     run_available_now_to_parquet,
     run_dedup_available_now,
+    run_dedup_to_parquet,
     stream_events_from_files,
     tumbling_counts_stream,
 )
@@ -190,3 +193,58 @@ def test_checkpoint_resume_processes_only_new_files(spark, sf_dir, tmpdir):
     union_n = first.unionByName(second).select("event_id").distinct().count()
     assert out.count() == union_n                       # overlap deduped
     assert out.select("event_id").distinct().count() == union_n
+
+
+def test_dedup_drain_runs_one_batch_and_reports_it(spark, tmpdir):
+    """Each drain over one source/sink/checkpoint commits exactly one
+    micro-batch (no trailing no-data batch) and returns its progress.
+
+    Without the no-data batch, a drain's late-row threshold is the
+    watermark the previous drain ended with (Spark judges late rows by
+    the previous batch's watermark), and state expired by that
+    watermark is evicted at the end of the drain's own data batch. So:
+    - redelivered events are dropped by the dedup state, also in the
+      drain that evicts their keys;
+    - an event older than the watermark of two drains back is dropped
+      as late and counted;
+    - a new event between the last two drains' watermarks is appended
+      (the threshold lags one drain; a trailing no-data batch would
+      have dropped it);
+    - a redelivery after its key was evicted is late, so no event is
+      ever appended twice."""
+    t0 = dt.datetime(2024, 1, 1)
+
+    def events(ids, hours):
+        return [
+            (i, t0 + dt.timedelta(hours=h), i % 7, "click", float(i), "")
+            for i, h in zip(ids, hours)
+        ]
+
+    first = events(range(100), [i / 100 for i in range(100)])  # ts in [0 h, 1 h)
+    fresh = events(range(100, 150), [5 + i / 50 for i in range(50)])  # [5 h, 6 h)
+    drops = [
+        first,  # watermark after: 1 h − 2 h = −1 h
+        first[:30] + fresh,  # 30 redelivered with the same ts; watermark after: 4 h
+        # 150 sits between −1 h and 4 h, 151 is older than −1 h, 5 is redelivered
+        events([150, 151], [3.0, -2.0]) + first[5:6] + events([152], [6.5]),
+        first[6:7],  # redelivered after its key was evicted
+    ]
+    src, dst, ckpt = (os.path.join(tmpdir, d) for d in ("src", "out", "ckpt"))
+    reports = []
+    for n, rows in enumerate(drops, 1):
+        spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        reports.append(run_dedup_to_parquet(spark, src, dst, ckpt))
+        assert len([f for f in os.listdir(os.path.join(ckpt, "offsets")) if f.isdigit()]) == n
+
+    assert [len(r) for r in reports] == [1, 1, 1, 1]
+    assert [r[0].numInputRows for r in reports] == [100, 80, 4, 1]
+    state = [r[0].stateOperators[0] for r in reports]
+    assert [s.numRowsDroppedByWatermark for s in state] == [0, 0, 1, 1]
+    assert state[0].numRowsTotal == 100
+    assert state[1].numRowsRemoved == 0  # the watermark was still −1 h
+    assert state[2].numRowsRemoved == 100  # the first drop's keys, by a later drain
+    assert state[2].numRowsTotal == 52
+    got = sorted(r["event_id"] for r in spark.read.parquet(dst).collect())
+    assert got == list(range(151)) + [152]
