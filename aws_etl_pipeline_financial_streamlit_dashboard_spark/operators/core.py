@@ -81,16 +81,3 @@ def unpivot_metrics(
     transform, no shuffle.
     """
     return df.unpivot(list(id_cols), list(value_cols), var_name, value_name)
-
-
-def keyed_positional_join(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
-    """Re-expression of the reference's positional row-index join (J7;
-    Frontend.py:84 ``merge(left_index=True, right_index=True)``).
-
-    Spark has no row order/index; the reference only ever applies this to
-    two single-row frames that share the real key, so the exact semantic
-    is a key equi-join with the duplicate key column dropped from the
-    right side (the reference drops the ``ticker_x/ticker_y`` collision
-    at Frontend.py:90).
-    """
-    return left.join(right, on=key, how="left")

@@ -1,28 +1,25 @@
-"""Distributed external-API extract source (SURVEY.md §2.1 S4, §2.10).
+"""Per-ticker records of the external financial API (SURVEY.md §2.1
+S4, §2.10): the schemas, the fetcher protocol, the fetchers and
+:func:`ticker_records`.
 
 The reference fetches yfinance serially per ticker on one EC2 box with
 linspace batching for memory and try/except per batch
-(retrieval.py:133-151, ~30 min for the full list, README.md:18). The
-Spark-native shape: the ticker seed DataFrame is repartitioned to the
-desired fetch parallelism and each partition runs an Arrow-batched
-``mapInPandas`` fetch — N workers fetching concurrently, per-ticker
-error isolation instead of per-batch, and the engine handles retries
-and partial-result semantics.
+(retrieval.py:133-151, ~30 min for the full list, README.md:18). Here
+the one extract is the ``financial_api`` DataSource
+(``sources/datasource.py``): the engine plans ticker partitions, and
+each partition's reader calls :func:`ticker_records` per ticker —
+per-ticker error isolation instead of per-batch.
 
 Network access doesn't exist in this container, so the fetcher is
 injectable: ``fake_fetcher`` produces deterministic reference-shaped
 records (same columns yfinance yields after the reference's column
-normalization). The distributed plumbing — partitioning, batch
-iteration, error rows, schema contract — is the real production path.
+normalization).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 INFO_SCHEMA = T.StructType(
@@ -61,11 +58,13 @@ STOCK_SCHEMA = T.StructType(
     ]
 )
 
-# A fetcher maps one ticker -> (info_record dict, list of monthly bars).
-Fetcher = Callable[[str], tuple[dict, list[dict]]]
+# A fetcher maps (ticker, mode) -> records: mode "info" fetches the
+# ticker's info snapshot (one record), mode "stock" its monthly bars
+# (one record per month). It fetches only what the mode reads.
+Fetcher = Callable[[str, str], list[dict]]
 
 
-def fake_fetcher(ticker: str) -> tuple[dict, list[dict]]:
+def fake_fetcher(ticker: str, mode: str) -> list[dict]:
     """Deterministic stand-in for the yfinance client: stable pseudo
     values derived from the ticker string (no RNG, no network)."""
     h = sum(ord(c) * (i + 1) for i, c in enumerate(ticker)) % 997
@@ -87,6 +86,8 @@ def fake_fetcher(ticker: str) -> tuple[dict, list[dict]]:
         "returnonassets": str(round(0.02 + (h % 7) / 100, 4)),
         "returnonequity": str(round(0.05 + (h % 9) / 100, 4)),
     }
+    if mode == "info":
+        return [info]
     bars = []
     for i, month in enumerate(
         f"2024-{m:02d}" for m in range(1, 13)
@@ -105,7 +106,7 @@ def fake_fetcher(ticker: str) -> tuple[dict, list[dict]]:
                 "stock_splits": 0.0,
             }
         )
-    return info, bars
+    return bars
 
 
 class RetryingFetcher:
@@ -118,8 +119,8 @@ class RetryingFetcher:
     jitter derived from the ticker, not an RNG, so behavior is
     reproducible and fleet-wide retries of the same failure window
     don't synchronize into a thundering herd. Runs INSIDE the
-    ``mapInPandas`` workers, so a retrying ticker stalls only its own
-    partition's row, not the job.
+    ``financial_api`` source's partition readers, so a retrying ticker
+    stalls only its own partition, not the job.
 
     ``retry_on`` bounds which failures retry (rate limits / transient
     transport errors); anything else propagates immediately to the
@@ -151,11 +152,11 @@ class RetryingFetcher:
         h = sum(ord(c) * (i + 1) for i, c in enumerate(ticker))
         return 1.0 + ((h * 31 + attempt * 17) % 1000) / 2000.0
 
-    def __call__(self, ticker: str) -> tuple[dict, list[dict]]:
+    def __call__(self, ticker: str, mode: str) -> list[dict]:
         last: BaseException | None = None
         for attempt in range(self._max_attempts):
             try:
-                return self._inner(ticker)
+                return self._inner(ticker, mode)
             except self._retry_on as exc:
                 last = exc
                 if attempt + 1 < self._max_attempts:
@@ -164,31 +165,34 @@ class RetryingFetcher:
         raise last
 
 
-def yfinance_fetcher(ticker: str) -> tuple[dict, list[dict]]:
+def yfinance_fetcher(ticker: str, mode: str) -> list[dict]:
     """Real yfinance client behind the same :data:`Fetcher` protocol
-    (retrieval.py:10-66 equivalent): ``Ticker.info`` snapshot +
-    2 years of monthly bars, column names normalized to the reference
-    contract (lowercased/underscored, retrieval.py:23,45; month key
-    'YYYY-MM', retrieval.py:44).
+    (retrieval.py:10-66 equivalent): mode ``"info"`` reads only the
+    ``Ticker.info`` snapshot (getDescription), mode ``"stock"`` only
+    2 years of monthly bars (getStock), column names normalized to the
+    reference contract (lowercased/underscored, retrieval.py:23,45;
+    month key 'YYYY-MM', retrieval.py:44).
 
     yfinance is not installed in this container — the import is gated
     and raises ImportError with guidance; wrap in
     ``RetryingFetcher(yfinance_fetcher)`` for the production policy.
-    All tests run against ``fake_fetcher`` through the identical
-    protocol, so the distributed plumbing is exercised without network.
+    The tests run the source against ``fake_fetcher`` through the
+    identical protocol, and this function against a stub module.
     """
     try:
         import yfinance  # type: ignore[import-not-found]
-    except ImportError as exc:  # pragma: no cover - no network/lib here
+    except ImportError as exc:
         raise ImportError(
             "yfinance is not available in this environment; inject "
             "fake_fetcher (tests) or install yfinance (production)"
         ) from exc
 
-    tk = yfinance.Ticker(ticker)  # pragma: no cover - network path
-    raw = {str(k).lower(): ("" if v is None else str(v)) for k, v in tk.info.items()}
-    info = {f.name: raw.get(f.name) for f in INFO_SCHEMA.fields if f.name != "fetch_error"}
-    info["ticker"] = ticker
+    tk = yfinance.Ticker(ticker)
+    if mode == "info":
+        raw = {str(k).lower(): ("" if v is None else str(v)) for k, v in tk.info.items()}
+        info = {f.name: raw.get(f.name) for f in INFO_SCHEMA.fields if f.name != "fetch_error"}
+        info["ticker"] = ticker
+        return [info]
     hist = tk.history(period="2y", interval="1mo")
     bars = []
     for idx, row in hist.iterrows():
@@ -205,68 +209,16 @@ def yfinance_fetcher(ticker: str) -> tuple[dict, list[dict]]:
                 "stock_splits": float(row.get("Stock Splits", 0.0)),
             }
         )
-    return info, bars
+    return bars
 
 
 def ticker_records(fetcher: Fetcher, ticker: str, mode: str) -> list[dict]:
-    """One ticker's output records: its ``info`` snapshot (mode
-    ``"info"``) or one record per monthly bar (any other mode), each
-    with ``fetch_error`` None. A failing fetch becomes a single
+    """One ticker's output records for ``mode`` (``fetcher``'s records,
+    each with ``fetch_error`` None). A failing fetch becomes a single
     ``{"ticker", "fetch_error"}`` row — per-ticker error isolation, vs
     the reference's skip-a-whole-batch try/except
     (retrieval.py:140-151)."""
     try:
-        info, bars = fetcher(ticker)
-        if mode == "info":
-            return [{**info, "fetch_error": None}]
-        return [{**b, "fetch_error": None} for b in bars]
+        return [{**r, "fetch_error": None} for r in fetcher(ticker, mode)]
     except Exception as exc:
         return [{"ticker": ticker, "fetch_error": repr(exc)}]
-
-
-def _fetch(
-    tickers: DataFrame,
-    fetcher: Fetcher,
-    parallelism: int | None,
-    ticker_col: str,
-    mode: str,
-) -> DataFrame:
-    schema = INFO_SCHEMA if mode == "info" else STOCK_SCHEMA
-    cols = schema.fieldNames()
-    src = tickers.select(F.upper(F.col(ticker_col)).alias("ticker"))
-    if parallelism:
-        src = src.repartition(parallelism)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [r for t in pdf["ticker"] for r in ticker_records(fetcher, t, mode)]
-            yield pd.DataFrame(out, columns=cols)
-
-    return src.mapInPandas(run, schema=schema)
-
-
-def fetch_info(
-    tickers: DataFrame,
-    fetcher: Fetcher = fake_fetcher,
-    parallelism: int | None = None,
-    ticker_col: str = "ticker_name",
-) -> DataFrame:
-    """Per-ticker snapshot extract (getDescription, retrieval.py:10-25).
-
-    ``repartition(parallelism)`` replaces the reference's linspace RAM
-    batching (retrieval.py:133-137): fetch concurrency == partition
-    count, each worker holds only its partition. Failures isolate
-    per-ticker into ``fetch_error`` rows (:func:`ticker_records`).
-    """
-    return _fetch(tickers, fetcher, parallelism, ticker_col, "info")
-
-
-def fetch_stock_history(
-    tickers: DataFrame,
-    fetcher: Fetcher = fake_fetcher,
-    parallelism: int | None = None,
-    ticker_col: str = "ticker_name",
-) -> DataFrame:
-    """Per-ticker monthly-bar history extract (getStock,
-    retrieval.py:27-47): one output row per (ticker, month)."""
-    return _fetch(tickers, fetcher, parallelism, ticker_col, "stock")

@@ -1,9 +1,6 @@
 """Spark 4 Python Data Source API wrapper for the external financial
 API extract (SURVEY.md §2.1 S4 — the reference's yfinance fetch,
-retrieval.py:10-66).
-
-Where ``sources/api_fetch.py`` drives the fetch through ``mapInPandas``
-over a ticker DataFrame, this module registers a first-class source:
+retrieval.py:10-66). It is the package's one extract path:
 
     spark.dataSource.register(FinancialApiDataSource)
     df = (spark.read.format("financial_api")
@@ -16,11 +13,14 @@ Being a real DataSource means the catalog/reader stack owns it: schema
 is declared up front, partitions are planned by the engine (one fetch
 task per partition, the distributed replacement for the reference's
 serial linspace batching, retrieval.py:133-146), and downstream ops
-compose like any other scan.
+compose like any other scan. Each partition's reader turns its tickers
+into rows with ``sources/api_fetch.ticker_records``.
 
-The fetcher is the deterministic fake (no network in this container);
-the partition planning, per-partition iteration, and schema contract
-are the production shape.
+The fetcher is the source's ``fetcher`` class attribute, by default the
+deterministic ``fake_fetcher`` (no network in this container). Inject
+another one by registering :meth:`FinancialApiDataSource.with_fetcher`.
+Batch reads take mode ``info`` or ``stock``, streaming reads mode
+``ticks``; any other mode is an error that names it.
 """
 
 from __future__ import annotations
@@ -36,9 +36,22 @@ from pyspark.sql import types as T
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.api_fetch import (
     INFO_SCHEMA,
     STOCK_SCHEMA,
+    Fetcher,
     fake_fetcher,
     ticker_records,
 )
+
+BATCH_SCHEMAS = {"info": INFO_SCHEMA, "stock": STOCK_SCHEMA}
+
+
+def _mode(options, allowed, read: str) -> str:
+    mode = options.get("mode", "info")
+    if mode not in allowed:
+        raise ValueError(
+            f"financial_api: mode {mode!r} is not a {read} mode "
+            f"(expected one of {', '.join(allowed)})"
+        )
+    return mode
 
 
 class _TickerPartition(InputPartition):
@@ -47,11 +60,12 @@ class _TickerPartition(InputPartition):
 
 
 class FinancialApiReader(DataSourceReader):
-    def __init__(self, options):
+    def __init__(self, options, fetcher: Fetcher):
         raw = options.get("tickers", "")
         self.tickers = [t.strip().upper() for t in raw.split(",") if t.strip()]
-        self.mode = options.get("mode", "info")
+        self.mode = _mode(options, BATCH_SCHEMAS, "batch")
         self.num_partitions = int(options.get("numPartitions", "4"))
+        self.fetcher = fetcher
 
     def partitions(self):
         """Contiguous ticker chunks — the reference's linspace batching
@@ -65,9 +79,9 @@ class FinancialApiReader(DataSourceReader):
         ] or [_TickerPartition([])]
 
     def read(self, partition):
-        fields = (INFO_SCHEMA if self.mode == "info" else STOCK_SCHEMA).fieldNames()
+        fields = BATCH_SCHEMAS[self.mode].fieldNames()
         for t in partition.tickers:
-            for rec in ticker_records(fake_fetcher, t, self.mode):
+            for rec in ticker_records(self.fetcher, t, self.mode):
                 yield tuple(rec.get(f) for f in fields)
 
 
@@ -75,20 +89,41 @@ class FinancialApiDataSource(DataSource):
     """``format("financial_api")`` — register with
     ``spark.dataSource.register(FinancialApiDataSource)``."""
 
+    fetcher: Fetcher = fake_fetcher
+
     @classmethod
     def name(cls) -> str:
         return "financial_api"
 
+    @classmethod
+    def with_fetcher(cls, fetcher: Fetcher) -> type[FinancialApiDataSource]:
+        """This source extracting through ``fetcher``; register the result.
+
+        Defined inside this call, the subclass (with ``fetcher``) is
+        pickled by value for the planner and worker processes; a
+        module-level subclass would be pickled by reference. ``fetcher``
+        must unpickle there too: a package function, a function defined
+        in a function, or an instance of an importable class such as
+        ``RetryingFetcher``. Register ``FinancialApiDataSource`` again to
+        restore ``fake_fetcher``."""
+
+        class Injected(cls):
+            pass
+
+        Injected.fetcher = fetcher
+        return Injected
+
     def schema(self):
-        mode = self.options.get("mode", "info")
-        if mode == "ticks":
-            return TICKS_SCHEMA
-        return INFO_SCHEMA if mode == "info" else STOCK_SCHEMA
+        mode = _mode(self.options, (*BATCH_SCHEMAS, "ticks"), "financial_api")
+        return TICKS_SCHEMA if mode == "ticks" else BATCH_SCHEMAS[mode]
 
     def reader(self, schema) -> DataSourceReader:
-        return FinancialApiReader(self.options)
+        # read on the class: a plain function stored on it would bind
+        # as a method if read on the instance
+        return FinancialApiReader(self.options, type(self).fetcher)
 
-    def simpleStreamReader(self, schema) -> "FinancialApiStreamReader":
+    def simpleStreamReader(self, schema) -> FinancialApiStreamReader:
+        _mode(self.options, ("ticks",), "streaming")
         return FinancialApiStreamReader(self.options)
 
 

@@ -7,6 +7,9 @@ import duckdb
 import pytest
 
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.session import get_spark
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.datasource import (
+    FinancialApiDataSource,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -30,6 +33,15 @@ ORACLE_TABLES = (
 def spark():
     s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def register_fetcher(spark):
+    """``register_fetcher(f)`` makes ``financial_api`` extract through
+    ``f``; the default source is registered again afterwards, so later
+    tests in the shared session see ``fake_fetcher``."""
+    yield lambda f: spark.dataSource.register(FinancialApiDataSource.with_fetcher(f))
+    spark.dataSource.register(FinancialApiDataSource)
 
 
 @pytest.fixture(scope="session")

@@ -1,13 +1,13 @@
 """Python Data Source API source: registration, partition planning,
-both modes, and agreement with the mapInPandas fetch path."""
+both batch modes, fetcher injection and mode checks."""
 
 from __future__ import annotations
 
 import pytest
 
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.api_fetch import (
-    fetch_info,
-    fetch_stock_history,
+    fake_fetcher,
+    ticker_records,
 )
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.datasource import (
     FinancialApiDataSource,
@@ -35,32 +35,60 @@ def test_info_mode_reads_all_tickers(spark):
     assert df.rdd.getNumPartitions() == 2
 
 
-def test_stock_mode_matches_mapinpandas_path(spark):
+@pytest.mark.parametrize("mode", ["info", "stock"])
+def test_mode_matches_ticker_records(spark, mode):
+    """The source's rows are ``ticker_records(fake_fetcher, t, mode)``
+    for every ticker, in schema order."""
     ds = (
         spark.read.format("financial_api")
         .option("tickers", TICKERS)
-        .option("mode", "stock")
+        .option("mode", mode)
         .load()
     )
-    seed = spark.createDataFrame(
-        [(t,) for t in TICKERS.split(",")], "ticker_name string"
-    )
-    mip = fetch_stock_history(seed)
-    assert sorted(map(tuple, ds.collect())) == sorted(map(tuple, mip.collect()))
+    fields = ds.schema.fieldNames()
+    want = [
+        tuple(rec.get(f) for f in fields)
+        for t in TICKERS.split(",")
+        for rec in ticker_records(fake_fetcher, t, mode)
+    ]
+    assert sorted(map(tuple, ds.collect())) == sorted(want)
 
 
-def test_info_mode_matches_mapinpandas_path(spark):
-    ds = (
-        spark.read.format("financial_api")
-        .option("tickers", TICKERS)
-        .option("mode", "info")
-        .load()
-    )
-    seed = spark.createDataFrame(
-        [(t,) for t in TICKERS.split(",")], "ticker_name string"
-    )
-    mip = fetch_info(seed)
-    assert sorted(map(tuple, ds.collect())) == sorted(map(tuple, mip.collect()))
+def test_reregistering_the_base_restores_fake_fetcher(spark):
+    def broken(ticker, mode):
+        raise RuntimeError("api down")
+
+    spark.dataSource.register(FinancialApiDataSource.with_fetcher(broken))
+    spark.dataSource.register(FinancialApiDataSource)
+    rows = spark.read.format("financial_api").option("tickers", TICKERS).load().collect()
+    assert all(r["fetch_error"] is None for r in rows)
+
+
+@pytest.mark.parametrize(
+    "kind, mode",
+    [("batch", "ticks"), ("batch", "bogus"), ("stream", "info"), ("stream", "bogus")],
+)
+def test_bad_mode_raises_naming_it(spark, tmp_path, kind, mode):
+    """Batch reads take ``info``/``stock`` and streaming reads
+    ``ticks``; any other mode fails with an error that names it instead
+    of a schema mismatch or silently served stock bars."""
+    if kind == "batch":
+        with pytest.raises(Exception, match=f"mode '{mode}' is not a"):
+            spark.read.format("financial_api").option("mode", mode).load().collect()
+        return
+    with pytest.raises(Exception, match=f"mode '{mode}' is not a"):
+        q = (
+            spark.readStream.format("financial_api")
+            .option("mode", mode)
+            .load()
+            .writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
 
 
 def test_partition_count_caps_at_tickers(spark):

@@ -1,7 +1,7 @@
-"""Tests for the distributed extract layer (sources/api_fetch.py) and
-sinks: the Spark-native retrieval.py (SURVEY.md §2.1 S4, §2.10 B1-B3)
-with a mocked fetcher, including per-ticker error isolation and
-idempotent overwrite."""
+"""Tests for the extract layer (the ``financial_api`` source over
+sources/api_fetch.py) and sinks: the Spark-native retrieval.py
+(SURVEY.md §2.1 S4, §2.10 B1-B3) with a mocked fetcher, including
+per-ticker error isolation and idempotent overwrite."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ import os
 import shutil
 import tempfile
 
-import pytest
 from pyspark.sql import functions as F
 
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.cleaning import (
@@ -18,8 +17,6 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.cleaning import 
 )
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.api_fetch import (
     fake_fetcher,
-    fetch_info,
-    fetch_stock_history,
 )
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.sinks import (
     write_marker,
@@ -30,33 +27,39 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.sinks import (
 TICKERS = ["AAA", "BBB", "CCC", "DDD", "EEE", "BOOM"]
 
 
-@pytest.fixture(scope="module")
-def tickers(spark):
+def _extract(spark, mode, partitions=2):
     # lowercase entries exercise the uppercase contract (retrieval.py:78)
-    return spark.createDataFrame(
-        [("aaa",), ("BBB",), ("ccc",), ("DDD",), ("eee",), ("BOOM",)],
-        ["ticker_name"],
+    return (
+        spark.read.format("financial_api")
+        .option("tickers", "aaa,BBB,ccc,DDD,eee,BOOM")
+        .option("mode", mode)
+        .option("numPartitions", str(partitions))
+        .load()
     )
 
 
-def test_fetch_info_distributed(spark, tickers):
-    df = fetch_info(tickers, parallelism=3)
+def _ok(df):
+    return df.filter(F.col("fetch_error").isNull()).drop("fetch_error")
+
+
+def test_info_extract_distributed(spark):
+    df = _extract(spark, "info", partitions=3)
     rows = {r["ticker"]: r for r in df.collect()}
-    assert set(rows) == {"AAA", "BBB", "CCC", "DDD", "EEE", "BOOM"}
+    assert set(rows) == set(TICKERS)
     assert rows["AAA"]["shortname"] == "Aaa Inc"
     assert all(r["fetch_error"] is None for r in rows.values())
     # stringly-typed contract (retrieval.py:19)
     assert dict(df.dtypes)["fulltimeemployees"] == "string"
 
 
-def test_fetch_error_isolation(spark, tickers):
-    def flaky(t):
+def test_fetch_error_isolation(spark, register_fetcher):
+    def flaky(t, mode):
         if t == "BOOM":
             raise RuntimeError("api down")
-        return fake_fetcher(t)
+        return fake_fetcher(t, mode)
 
-    df = fetch_info(tickers, fetcher=flaky, parallelism=2)
-    rows = {r["ticker"]: r for r in df.collect()}
+    register_fetcher(flaky)
+    rows = {r["ticker"]: r for r in _extract(spark, "info").collect()}
     # one bad ticker doesn't lose the rest (vs reference's whole-batch skip)
     assert rows["BOOM"]["fetch_error"] is not None
     assert rows["BOOM"]["shortname"] is None
@@ -64,8 +67,8 @@ def test_fetch_error_isolation(spark, tickers):
     assert len(ok) == 5
 
 
-def test_fetch_stock_history_shape(spark, tickers):
-    df = fetch_stock_history(tickers, parallelism=2)
+def test_stock_extract_shape(spark):
+    df = _extract(spark, "stock")
     assert df.filter(F.col("ticker") == "AAA").count() == 12  # monthly bars
     months = [
         r["month"]
@@ -83,51 +86,45 @@ def _fin_raw(spark):
     )
 
 
-def test_extract_to_transform_end_to_end(spark, tickers):
+def test_extract_to_transform_end_to_end(spark):
     """Full extract→transform: fetched raw tables flow through
     run_transform (the retrieval.py → cleaning.py pipeline seam)."""
-    info_raw = fetch_info(tickers, parallelism=2).filter(
-        F.col("fetch_error").isNull()
-    ).drop("fetch_error")
-    stock_raw = fetch_stock_history(tickers, parallelism=2).filter(
-        F.col("fetch_error").isNull()
-    ).drop("fetch_error")
-    serving = run_transform(info_raw, stock_raw, _fin_raw(spark))
+    serving = run_transform(
+        _ok(_extract(spark, "info")), _ok(_extract(spark, "stock")), _fin_raw(spark)
+    )
     assert serving["company_info"].count() == 6
     assert serving["stock_price"].count() == 6 * 12
     assert serving["ratios"].filter("market_cap IS NULL").count() == 0
 
 
-def _logging_fetcher(log: str, mode: str):
+def _logging_fetcher(log: str):
     """``fake_fetcher`` that appends ``"<mode> <ticker> <seq>"`` to
     ``log`` per call, under a file lock, so calls made by any Python
     worker are counted. ``seq`` numbers the calls; the info snapshot's
     ``fulltimeemployees`` and ``sharesoutstanding`` both carry it."""
 
-    def fetch(ticker):
+    def fetch(ticker, mode):
         with open(log, "a+") as fh:
             fcntl.flock(fh, fcntl.LOCK_EX)
             fh.seek(0)
             seq = len(fh.read().splitlines()) + 1
             fh.write(f"{mode} {ticker} {seq}\n")
-        info, bars = fake_fetcher(ticker)
-        return {**info, "fulltimeemployees": str(seq), "sharesoutstanding": str(seq)}, bars
+        recs = fake_fetcher(ticker, mode)
+        if mode == "info":
+            recs = [{**recs[0], "fulltimeemployees": str(seq), "sharesoutstanding": str(seq)}]
+        return recs
 
     return fetch
 
 
-def test_refresh_fetches_each_ticker_once(spark, tickers, tmp_path):
+def test_refresh_fetches_each_ticker_once(spark, register_fetcher, tmp_path):
     """One refresh (extract → run_transform → the four writes) fetches
-    each ticker's info snapshot once, and company_info and ratios both
-    come from that one call."""
+    each ticker once per mode, and company_info and ratios both come
+    from the one info call."""
     log = str(tmp_path / "calls.log")
-
-    def extract(fetch, mode):
-        df = fetch(tickers, fetcher=_logging_fetcher(log, mode), parallelism=2)
-        return df.filter(F.col("fetch_error").isNull()).drop("fetch_error")
-
+    register_fetcher(_logging_fetcher(log))
     serving = run_transform(
-        extract(fetch_info, "info"), extract(fetch_stock_history, "stock"), _fin_raw(spark)
+        _ok(_extract(spark, "info")), _ok(_extract(spark, "stock")), _fin_raw(spark)
     )
     for name, df in serving.items():
         write_parquet_overwrite(df, str(tmp_path / name))
@@ -145,12 +142,12 @@ def test_refresh_fetches_each_ticker_once(spark, tickers, tmp_path):
     assert read("ratios", "outstanding_shares") == seq
 
 
-def test_overwrite_idempotence_and_marker(spark, tickers):
+def test_overwrite_idempotence_and_marker(spark):
     """B3/S9: writing twice ≡ writing once; marker file written."""
     d = tempfile.mkdtemp(prefix="sink_test_")
     try:
         path = os.path.join(d, "info")
-        df = fetch_info(tickers, parallelism=2)
+        df = _extract(spark, "info")
         write_parquet_overwrite(df, path)
         write_parquet_overwrite(df, path)  # overwrite, not append
         assert spark.read.parquet(path).count() == 6
