@@ -5,20 +5,21 @@ Catalyst, declarative sources/sinks, and LLM-data-pipeline extension
 operators (dedup, similarity search, text analysis, multimodal columns)
 designed for horizontal scale.
 
-Package layout:
-- ``session``    SparkSession factory with scale-aware defaults (AQE etc.)
-- ``schemas``    explicit StructTypes for the serving + testdata tables
-- ``sources``    readers/sinks (parquet, csv, json, jdbc, api-fetch source)
-- ``operators``  composable DataFrame operators (projection, argmax-join,
-                 union-align, unpivot, dedup, similarity, text analysis)
-- ``functions``  scalar/column helpers (name normalization, month keys)
-- ``plans``      full query plans: the cleaning transform pipeline, the six
-                 dashboard queries, and the TPC-H-analog query catalog that
-                 backs ``__spark_entry__.queries()`` and ``bench.py``
-- ``streaming``  Structured Streaming: windowed aggs, watermarks, markers
+The product is the refresh and the dashboard:
+- ``sources``          the ``financial_api`` extract (``datasource``,
+                       ``api_fetch``), table readers and parquet writers
+- ``plans.cleaning``   the transform that builds the four serving tables
+- ``plans.dashboard``  the six ticker-page queries over those tables
+- ``streaming.jobs``   event-drop dedup into parquet
+with ``session`` (SparkSession factory), ``schemas`` (explicit
+StructTypes) and the ``operators.core``/``functions`` helpers they use.
+
+The driver's query catalog is everything else: ``plans.catalog`` imports
+every ``plans/catalog_*`` entry (registered through ``plans.registry``)
+and backs ``__spark_entry__.queries()``; most of ``operators`` and
+``streaming.stateful`` serve only the catalog.
+
+No ``__init__`` exports anything (except the two ``sources`` names
+``perfbench`` imports): import the submodule you use, so a product
+import loads only the product.
 """
-
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.session import get_spark
-
-__all__ = ["get_spark"]
-__version__ = "0.1.0"

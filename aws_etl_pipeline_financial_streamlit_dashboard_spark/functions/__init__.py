@@ -1,9 +1,1 @@
 """Scalar/column helper functions shared across plans (SURVEY.md §2.8)."""
-
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.functions.scalars import (
-    month_display,
-    month_key,
-    safe_div,
-)
-
-__all__ = ["month_display", "month_key", "safe_div"]

@@ -1,65 +1,1 @@
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.asof import asof_join
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.clustering import (
-    kmeans_deterministic,
-)
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.components import (
-    connected_components,
-)
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.core import (
-    argmax_latest,
-    cast_columns,
-    select_rename,
-    union_align,
-    unpivot_metrics,
-)
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.dedup import (
-    winnowing_fingerprints,
-)
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.monitor import (
-    quality_report,
-    with_quality_metrics,
-)
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.rangejoin import (
-    bucketed_range_join,
-)
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.ranking import bm25_topk
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.sampling import (
-    mix_corpora,
-    stratified_sample,
-)
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.scd import scd2_merge
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.skew import (
-    grouped_topk,
-    salted_aggregate,
-    salted_join,
-)
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.splits import (
-    decontaminate,
-    decontaminate_spans,
-    hash_split,
-)
-
-__all__ = [
-    "argmax_latest",
-    "asof_join",
-    "bm25_topk",
-    "bucketed_range_join",
-    "cast_columns",
-    "connected_components",
-    "decontaminate",
-    "decontaminate_spans",
-    "grouped_topk",
-    "hash_split",
-    "kmeans_deterministic",
-    "mix_corpora",
-    "quality_report",
-    "salted_aggregate",
-    "salted_join",
-    "scd2_merge",
-    "select_rename",
-    "stratified_sample",
-    "union_align",
-    "unpivot_metrics",
-    "winnowing_fingerprints",
-    "with_quality_metrics",
-]
+"""Composable DataFrame operators; import the module you use."""

@@ -1,7 +1,3 @@
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import (
-    QUERIES,
-    QuerySpec,
-    headline_queries,
-)
-
-__all__ = ["QUERIES", "QuerySpec", "headline_queries"]
+"""Full query plans: the product's cleaning transform and dashboard
+queries, and the driver's query catalog (``catalog``, ``catalog_*``,
+``registry``)."""

@@ -20,10 +20,6 @@ Conventions (hash-stability across engines):
 
 from __future__ import annotations
 
-import weakref
-from dataclasses import dataclass, field
-from typing import Callable, Optional
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,144 +29,21 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.core import 
     union_align,
     unpivot_metrics,
 )
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.readers import read_table
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.functions.scalars import (
-    dec_sum,
-    dexpr,
     round_half_up as rhu,
     sql_dec_sum,
     sql_stable_avg,
     stable_avg,
 )
-
-
-@dataclass
-class QuerySpec:
-    """A catalog entry: Spark plan + DuckDB oracle + metadata."""
-
-    name: str
-    spark: Callable[[SparkSession, str], DataFrame]
-    oracle: Optional[str]  # ANSI SQL for DuckDB; None → rows-only check
-    doc: str = ""
-    headline: bool = False  # included in bench.py
-
-    def __post_init__(self) -> None:
-        if self.doc:
-            self.spark.__doc__ = self.doc
-
-
-QUERIES: dict[str, QuerySpec] = {}
-
-
-def register(
-    name: str,
-    oracle: Optional[str],
-    doc: str = "",
-    headline: bool = False,
-):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        QUERIES[name] = QuerySpec(name, fn, oracle, doc, headline)
-        return fn
-
-    return deco
-
-
-def headline_queries() -> dict[str, QuerySpec]:
-    return {k: v for k, v in QUERIES.items() if v.headline}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
-# ---------------------------------------------------------------------------
-# Headline queries build via ONE spark.sql() call over sg_-prefixed
-# temp views: the Column-DSL form cost 0.09-0.12 s of py4j round trips
-# per plan build (measured, ~0.45 s of the 2.2 s sequential bench
-# headline — VERDICT r4 item 3), a single SQL parse costs ~0.01 s.
-# View registration is metadata, not query work (the bench-protocol
-# analog of a warehouse's catalog), so it is cached per (application,
-# sf_dir); each spark.sql() still builds a FRESH plan with fresh RDDs,
-# so no shuffle-stage reuse leaks into timings. The sg_ prefix keeps
-# these views out of the way of user/test views named after the raw
-# tables.
-# ---------------------------------------------------------------------------
-# Keyed by the SparkSession OBJECT (weakly, so dead sessions drop
-# out): temp views live in the per-session catalog, so an
-# applicationId key would wrongly skip registration for a second
-# session (spark.newSession()) in the same application.
-_VIEW_REG: "weakref.WeakKeyDictionary[SparkSession, str]" = (
-    weakref.WeakKeyDictionary()
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.registry import (
+    QUERIES,
+    _Q16_CUST_REGION,
+    _dbl,
+    _sgv,
+    _t,
+    dim_fits_broadcast,
+    register,
 )
-_HEADLINE_TABLES = ("customer", "nation", "region", "orders", "lineitem")
-
-
-def _sgv(spark: SparkSession, sf_dir: str) -> None:
-    if _VIEW_REG.get(spark) != sf_dir:
-        for t in _HEADLINE_TABLES:
-            read_table(spark, sf_dir, t).createOrReplaceTempView(f"sg_{t}")
-        _VIEW_REG[spark] = sf_dir
-
-
-# relation sizes (file-metadata stats, no scan) cached per session —
-# plan-build metadata, not query work, same contract as _VIEW_REG
-_DIM_SIZES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def dim_fits_broadcast(spark: SparkSession, sf_dir: str, table: str) -> bool:
-    """Size guard for dim broadcast hints on linearly-scaling tables
-    (SCALE.md session defaults: "the rule scales, a hardcoded hint
-    wouldn't"). True iff the dim's relation size — parquet footer
-    stats, never a scan — is under the session's
-    autoBroadcastJoinThreshold. q16/q34 emit their BROADCAST(cr) pin
-    only under this guard: at every bench scale (customer.parquet is
-    17 MB even at sf10) the measured broadcast plan is unchanged,
-    while at 100× the hint disappears and the threshold + AQE own the
-    decision — a hard hint would force the full dim as build side and
-    OOM. The threshold is re-read per call (not cached) so tests can
-    flip it; the size is cached per (session, sf_dir, table)."""
-    cache = _DIM_SIZES.setdefault(spark, {})
-    key = (sf_dir, table)
-    if key not in cache:
-        rel = read_table(spark, sf_dir, table)
-        cache[key] = int(
-            str(
-                rel._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
-    thr = int(
-        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    )
-    return 0 < thr and cache[key] < thr
-
-
-def maybe_broadcast_dim(
-    spark: SparkSession, sf_dir: str, table: str, frame: DataFrame
-) -> DataFrame:
-    """Column-DSL twin of the q16/q34 size-guarded hint: broadcast
-    ``frame`` (a projection/fold OF ``table`` — never wider than it)
-    only while the base table's relation size fits the session
-    broadcast threshold. Used where an UN-hinted join measurably
-    regresses at bench scale (the static planner over-estimates a
-    joined dim fold and picks SMJ; AQE's runtime rescue still pays the
-    fact-side exchange — q92 +98% / q93 +211% at sf10, docs/PERF.md
-    round-8) but a hard hint would OOM at 100×: the guard keeps the
-    measured local plan and hands the decision back to the threshold +
-    AQE exactly when the dim outgrows it."""
-    if dim_fits_broadcast(spark, sf_dir, table):
-        return F.broadcast(frame)
-    return frame
-
-
-def _dbl(sql: str) -> str:
-    """SQL-text twin of :func:`dexpr` (CAST AS DOUBLE — Spark parses
-    the literal 100.0 as DECIMAL(4,1), DuckDB as DOUBLE)."""
-    return f"CAST(({sql}) AS DOUBLE)"
 
 
 # ===========================================================================
@@ -397,7 +270,7 @@ _FLAGSHIP_ORACLE = f"""
     headline=True,
 )
 def q07_flagship_industry_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # One spark.sql() build (see _sgv note) — the SAME portable sql_*
+    # One spark.sql() build (see registry._sgv note) — the SAME portable sql_*
     # aggregate text the oracle runs, the same plan the Column-DSL form
     # produced: BROADCAST(n) replaces F.broadcast(nation); order_stats
     # partial-aggregates map-side before its shuffle. SHUFFLE_HASH(os)
@@ -459,7 +332,7 @@ _Q07_SPARK_SQL = f"""
     headline=True,
 )
 def q08_monthly_avg_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # One spark.sql() build (see _sgv note); same plan as the
+    # One spark.sql() build (see registry._sgv note); same plan as the
     # Column-DSL form (trunc-to-month group key, format after agg).
     _sgv(spark, sf_dir)
     return spark.sql(_Q08_SPARK_SQL)
@@ -751,7 +624,7 @@ def q15_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
 )
 def q16_star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # One spark.sql() build (see _sgv note). Hints carry the pins the
+    # One spark.sql() build (see registry._sgv note). Hints carry the pins the
     # Column-DSL form expressed: SHUFFLE_HASH(o) is the fact-fact join
     # pin, BROADCAST(n)/(r) the explicit dim broadcasts (customer stays
     # size-policy). Per-orderkey rollup keeps the hi/lo long sums SPLIT
@@ -775,24 +648,8 @@ def q16_star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q16_E = "(l_extendedprice * (1 - l_discount))"
 _Q16_TOTAL = "(CAST(SUM(rev_hi) AS DOUBLE) + CAST(SUM(rev_lo) AS DOUBLE) / 1000000.0)"
-# cust_region: the THREE dim joins (customer→nation→region) fold into
-# ONE broadcast-able (c_custkey, r_name) map built in a single subquery
-# — the executed-plan metrics at sf1 showed three separate
-# BroadcastExchange jobs (customer collect ~10 MB plus two 25/5-row
-# exchanges, each paying its own job-launch latency per fresh plan);
-# folding them removes two whole jobs, measured −10% at sf1. This is
-# standard star-schema dim denormalization: at 100 TB the same
-# subquery stays correct — customer outgrows the broadcast threshold
-# and Catalyst shuffles the fold, but the fact side still joins ONE
-# narrow (bigint, string) map instead of three relations.
-_Q16_CUST_REGION = """
-    cust_region AS (
-        SELECT /*+ BROADCAST(n), BROADCAST(r) */ c.c_custkey, r.r_name
-        FROM sg_customer c
-        JOIN sg_nation n ON c.c_nationkey = n.n_nationkey
-        JOIN sg_region r ON n.n_regionkey = r.r_regionkey
-    )
-"""
+
+
 def _q16_sql(cr_hint: str) -> str:
     """q16's SQL with the size-guarded ``BROADCAST(cr)`` slot filled
     programmatically (``cr_hint`` is ``", BROADCAST(cr)"`` or ``""``)
@@ -854,7 +711,7 @@ _Q16_SPARK_SQL = _q16_sql(", BROADCAST(cr)")
     headline=True,
 )
 def q17_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # One spark.sql() build (see _sgv note) — same portable sql_*
+    # One spark.sql() build (see registry._sgv note) — same portable sql_*
     # aggregate text the oracle runs. The shipdate literal is
     # TIMESTAMP_NTZ so the predicate compares NTZ-to-NTZ (session-
     # timezone-invariant; the earlier LTZ cast coerced through the
@@ -894,6 +751,10 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans import (  # noqa
     catalog_streaming,
     catalog_web,
 )
+
+# q73 shares q07's oracle verbatim (identical semantics, different
+# physical layout — the q34/q16 pattern)
+QUERIES["q73_flagship_bucketed"].oracle = QUERIES["q07_flagship_industry_avg"].oracle
 
 # ---------------------------------------------------------------------------
 # Registration-order rotation: the driver's correctness gate samples

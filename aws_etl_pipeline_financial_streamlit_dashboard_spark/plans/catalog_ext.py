@@ -1,6 +1,6 @@
 """Extension-operator catalog entries: dedup, text analysis, similarity
 search over the ``documents`` / ``embeddings`` testdata (SURVEY.md
-§2.13). Registered into plans.catalog.QUERIES on import.
+§2.13). Registered into plans.registry.QUERIES on import.
 
 Oracle notes: engine-specific hash functions (xxhash64) can't be
 replicated in DuckDB, so signature-based ops (simhash, minhash-LSH,
@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators import dedup as D
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators import similarity as S
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators import text as X
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import register
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.registry import register
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.readers import read_table
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.functions.scalars import round_half_up as rhu
 

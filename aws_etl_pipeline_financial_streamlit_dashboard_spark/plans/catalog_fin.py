@@ -3,7 +3,7 @@ query family the reference's dashboard domain implies but its six
 Frontend queries stop short of (Frontend.py:28-97 renders statement
 averages and monthly price series; a finance user's next asks are
 candlesticks, VWAP, drawdown, smoothing, and cross-asset correlation).
-Registered into plans.catalog.QUERIES on import.
+Registered into plans.registry.QUERIES on import.
 
 The events table is the tick-stream analog: event_type is the symbol,
 value the trade price, props carries the trade size as JSON (F12-style
@@ -34,7 +34,7 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.functions.scalars impo
     sql_month_from_us_spark,
     ts_micros,
 )
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import register
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.registry import register
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.readers import read_table
 
 

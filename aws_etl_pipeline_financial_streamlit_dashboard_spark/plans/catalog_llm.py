@@ -1,7 +1,7 @@
 """Round-2 LLM-pipeline catalog entries: benchmark decontamination,
 deterministic dataset splits, quality-percentile filtering, corpus
 shape statistics, text normalization, robust outlier stats, and
-cross-source diversity. Registered into plans.catalog.QUERIES on
+cross-source diversity. Registered into plans.registry.QUERIES on
 import.
 
 These extend the dedup/similarity/text ladder (catalog_ext,
@@ -28,7 +28,7 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.functions.scalars impo
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators import splits as SP
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.dedup import word_shingles
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.text import tokens
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import register
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.registry import register
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.readers import read_table
 
 
@@ -1221,7 +1221,7 @@ def x43_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Share x18's oracle: the closure is implementation-independent.
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import QUERIES as _Q  # noqa: E402
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.registry import QUERIES as _Q  # noqa: E402
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans import catalog_more as _cm  # noqa: E402
 
 _Q["x43_components_star"].oracle = _cm._COMPONENTS_ORACLE

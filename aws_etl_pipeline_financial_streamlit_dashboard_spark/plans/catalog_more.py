@@ -2,7 +2,7 @@
 window analytics, correlated scalar subqueries, pivot, and set
 operations — capabilities beyond the reference's own surface
 (SURVEY.md §2 'not present' rows) that a complete engine needs.
-Registered into plans.catalog.QUERIES on import.
+Registered into plans.registry.QUERIES on import.
 """
 
 from __future__ import annotations
@@ -18,7 +18,14 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.functions.scalars impo
     sql_stable_avg,
     stable_avg,
 )
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import register
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.registry import (
+    _Q16_CUST_REGION,
+    _dbl,
+    _sgv,
+    dim_fits_broadcast,
+    maybe_broadcast_dim,
+    register,
+)
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.readers import read_table
 
 
@@ -1415,28 +1422,18 @@ def q34_star_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aws_etl_pipeline_financial_streamlit_dashboard_spark.functions.scalars import (
         sql_dec_sum,
     )
-    from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import (
-        _dbl,
-        _sgv,
-    )
-
     li_t, od_t = _bucketed_fact_tables(spark, sf_dir)
     _sgv(spark, sf_dir)
-    # One spark.sql() build (see catalog._sgv note). MERGE(o) pins the
+    # One spark.sql() build (see registry._sgv note). MERGE(o) pins the
     # bucketed sort-merge path: at toy scale the orders side fits the
     # broadcast threshold, which would silently bypass the bucketed
     # join this entry demonstrates; at 100 TB neither fact side
     # broadcasts and sort-merge-on-buckets IS the plan. The dim chain
-    # folds into catalog._Q16_CUST_REGION's single (c_custkey, r_name)
+    # folds into registry._Q16_CUST_REGION's single (c_custkey, r_name)
     # broadcast map — one broadcast job instead of three (same
     # measured win and 100 TB fallback as q16). BROADCAST(cr) is
     # size-guarded exactly as in q16: customer scales linearly, so the
     # hint exists only while the fold provably fits the threshold.
-    from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import (
-        _Q16_CUST_REGION,
-        dim_fits_broadcast,
-    )
-
     cr_hint = (
         ", BROADCAST(cr)"
         if dim_fits_broadcast(spark, sf_dir, "customer")
@@ -2517,7 +2514,7 @@ def _custkey_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str
 
 @register(
     "q73_flagship_bucketed",
-    None,  # placeholder; real oracle assigned below (shared with q07)
+    None,  # placeholder; plans.catalog assigns q07's oracle
     doc="""q07's flagship industry-average query over CUSTKEY-BUCKETED
     storage: orders and customer hash-clustered into matching buckets
     on custkey at write time, so (1) the per-customer rollup's
@@ -2532,11 +2529,6 @@ def _custkey_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str
     README.md:29). Results identical to q07 — same oracle SQL.""",
 )
 def q73_flagship_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import (
-        _dbl,
-        _sgv,
-    )
-
     od_t, cu_t = _custkey_bucketed_tables(spark, sf_dir)
     _sgv(spark, sf_dir)  # nation via the cached sg_ view
     return spark.sql(f"""
@@ -2560,15 +2552,6 @@ def q73_flagship_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         LEFT JOIN order_stats os ON c.c_custkey = os.o_custkey
         GROUP BY n.n_name
     """)
-
-
-# q73 shares q07's oracle verbatim (identical semantics, different
-# physical layout — the q34/q16 pattern)
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import (  # noqa: E402
-    QUERIES as _Q,
-)
-
-_Q["q73_flagship_bucketed"].oracle = _Q["q07_flagship_industry_avg"].oracle
 
 
 # ===========================================================================
@@ -3309,11 +3292,6 @@ def q81_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the double-correlated EXISTS/NOT EXISTS de-correlated into one
 # per-order aggregate.
 # ===========================================================================
-
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import (  # noqa: E402
-    _dbl,
-    maybe_broadcast_dim,
-)
 
 _Q82_ORACLE = """
     SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_late_orders

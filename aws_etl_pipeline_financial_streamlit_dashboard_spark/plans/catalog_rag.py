@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import register
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.registry import register
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog_ext import (
     _QUERY_ID_CAP as _Q_CAP,  # fixed query workload — see catalog_ext
 )
@@ -451,7 +451,6 @@ _X109_ORACLE = f"""
     aggregates union into the report.""",
 )
 def x109_deletion_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import QUERIES
     from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.text import (
         token_count,
     )

@@ -25,7 +25,7 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.operators.web import (
     sql_html_fields,
     sql_raw_url,
 )
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import register
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.registry import register
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.readers import read_table
 
 _RAW = sql_raw_url()

@@ -171,7 +171,9 @@ def yfinance_fetcher(ticker: str, mode: str) -> list[dict]:
     ``Ticker.info`` snapshot (getDescription), mode ``"stock"`` only
     2 years of monthly bars (getStock), column names normalized to the
     reference contract (lowercased/underscored, retrieval.py:23,45;
-    month key 'YYYY-MM', retrieval.py:44).
+    month key 'YYYY-MM', retrieval.py:44). Info values are stringified,
+    except a ``None`` (say, a non-dividend stock's ``dividendYield``),
+    which stays null: the transform's strict double casts reject ``''``.
 
     yfinance is not installed in this container — the import is gated
     and raises ImportError with guidance; wrap in
@@ -189,7 +191,7 @@ def yfinance_fetcher(ticker: str, mode: str) -> list[dict]:
 
     tk = yfinance.Ticker(ticker)
     if mode == "info":
-        raw = {str(k).lower(): ("" if v is None else str(v)) for k, v in tk.info.items()}
+        raw = {str(k).lower(): (None if v is None else str(v)) for k, v in tk.info.items()}
         info = {f.name: raw.get(f.name) for f in INFO_SCHEMA.fields if f.name != "fetch_error"}
         info["ticker"] = ticker
         return [info]

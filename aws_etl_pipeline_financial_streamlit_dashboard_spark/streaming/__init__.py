@@ -1,21 +1,2 @@
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.streaming.jobs import (
-    dedup_events_stream,
-    run_available_now_to_parquet,
-    run_dedup_to_parquet,
-    stream_events_from_files,
-    tumbling_counts_stream,
-)
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.streaming.stateful import (
-    running_user_totals,
-    sessionize_users,
-)
-
-__all__ = [
-    "dedup_events_stream",
-    "run_available_now_to_parquet",
-    "run_dedup_to_parquet",
-    "running_user_totals",
-    "sessionize_users",
-    "stream_events_from_files",
-    "tumbling_counts_stream",
-]
+"""Structured Streaming: the event-drop dedup jobs (``jobs``), the
+isolated stream session and the catalog's stateful streams."""

@@ -47,14 +47,6 @@ import time
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO_ROOT)
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import (  # noqa: E402
-    QUERIES,
-    headline_queries,
-)
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.session import get_spark  # noqa: E402
-
 
 def _cache_state() -> dict[str, int]:
     """One-line OS cache snapshot (MB) recorded inside the artifact —
@@ -266,6 +258,10 @@ _AQE_MIN_BYTES = 1 << 40
 
 
 def main() -> None:
+    # Imported here, not at module level: perfbench/sysmon.py and
+    # run_verify.py import only the CPU helpers above.
+    from aws_etl_pipeline_financial_streamlit_dashboard_spark.session import get_spark
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     total_bytes = _input_bytes(sf_dir)
@@ -328,6 +324,13 @@ def _run_window(spark, sf_dir: str) -> dict:
     split-scan, serving layout) against an already-built session —
     returns the artifact dict instead of printing so main() can
     adjudicate contention across windows."""
+    from pyspark.sql import functions as F
+
+    from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import QUERIES
+    from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.registry import (
+        headline_queries,
+    )
+
     cache_info: dict[str, object] = {"start": _cache_state()}
     cpu_start = _cpu_state()
     cpu_wall0 = time.perf_counter()

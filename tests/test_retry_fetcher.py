@@ -105,7 +105,8 @@ def test_yfinance_fetcher_fetches_only_what_the_mode_reads(monkeypatch):
     """Mode ``info`` reads ``Ticker.info`` and never the history, mode
     ``stock`` the reverse, so a refresh (one info and one stock load)
     makes 2 API calls per ticker, as the reference does. Info keys are
-    lowercased and values stringified; bars are keyed ``YYYY-MM``."""
+    lowercased and values stringified (``None`` stays null); bars are
+    keyed ``YYYY-MM``."""
     calls = []
 
     class Ticker:
@@ -132,7 +133,7 @@ def test_yfinance_fetcher_fetches_only_what_the_mode_reads(monkeypatch):
     assert calls == [("info", "AAPL")]
     assert info["ticker"] == "AAPL" and info["fetch_error"] is None
     assert info["shortname"] == "Apple Inc." and info["industry"] == "Tech"
-    assert info["fulltimeemployees"] == "164000" and info["dividendyield"] == ""
+    assert info["fulltimeemployees"] == "164000" and info["dividendyield"] is None
     assert info["website"] is None  # absent upstream
 
     calls.clear()
@@ -142,3 +143,60 @@ def test_yfinance_fetcher_fetches_only_what_the_mode_reads(monkeypatch):
     assert bars[1]["close"] == 2.5 and bars[1]["volume"] == 20.0
     assert bars[1]["dividends"] == 0.25 and bars[1]["stock_splits"] == 0.0
     assert all(b["ticker"] == "AAPL" and b["fetch_error"] is None for b in bars)
+
+
+def test_yfinance_refresh_keeps_missing_info_values_null(monkeypatch, spark):
+    """A live refresh over yfinance info with ``None`` values (no
+    dividend, no employee count) builds every serving table: the
+    values arrive null, so ``run_transform``'s strict double casts
+    (ANSI) read null instead of failing on ``''``."""
+    from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.cleaning import (
+        run_transform,
+    )
+    from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.api_fetch import (
+        INFO_SCHEMA,
+        STOCK_SCHEMA,
+    )
+
+    infos = {
+        "AAPL": {"shortName": "Apple Inc.", "industry": "Tech",
+                 "fullTimeEmployees": 164000, "sharesOutstanding": 15000,
+                 "previousClose": 190.5, "dividendYield": None},
+        "NDIV": {"shortName": "No Dividend Co", "industry": "Tech",
+                 "fullTimeEmployees": None, "sharesOutstanding": 300,
+                 "previousClose": 12.0, "dividendYield": None},
+    }
+
+    class Ticker:
+        def __init__(self, symbol):
+            self.info = infos[symbol]
+
+        def history(self, period, interval):
+            return pd.DataFrame(
+                {"Open": [1.0], "Close": [1.5], "High": [2.0], "Low": [0.5],
+                 "Volume": [10]},
+                index=pd.to_datetime(["2024-01-01"]),
+            )
+
+    monkeypatch.setitem(sys.modules, "yfinance", types.SimpleNamespace(Ticker=Ticker))
+
+    def load(mode, schema):
+        rows = [r for t in infos for r in ticker_records(yfinance_fetcher, t, mode)]
+        assert all(r["fetch_error"] is None for r in rows)
+        return spark.createDataFrame(rows, schema).drop("fetch_error")
+
+    fin_raw = spark.createDataFrame(
+        [(t, "2024-03", 10.0, 5.0, 1.0, 2.0, 3.0, 20.0, 10.0) for t in infos],
+        "ticker string, month string, cash_and_cash_equivalents double, "
+        "ebitda double, net_income double, net_debt double, total_debt double, "
+        "current_assets double, current_liabilities double",
+    )
+    tables = run_transform(load("info", INFO_SCHEMA), load("stock", STOCK_SCHEMA), fin_raw)
+
+    ratios = {r["ticker"]: r for r in tables["ratios"].collect()}
+    assert set(ratios) == set(infos)
+    assert all(r["dividend_yield"] is None for r in ratios.values())
+    assert ratios["AAPL"]["market_cap"] == 15000 * 190.5
+    company = {r["ticker"]: r for r in tables["company_info"].collect()}
+    assert company["AAPL"]["full_time_employees"] == 164000
+    assert company["NDIV"]["full_time_employees"] is None

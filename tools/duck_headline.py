@@ -25,7 +25,9 @@ sys.path.insert(0, REPO_ROOT)
 
 import duckdb  # noqa: E402
 
-from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import (  # noqa: E402
+# plans.catalog registers every entry; the registry reads them back
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans import catalog  # noqa: E402,F401
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.registry import (  # noqa: E402
     headline_queries,
 )
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.schemas import (  # noqa: E402
